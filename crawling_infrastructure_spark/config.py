@@ -114,14 +114,6 @@ class TaskConfig:
     # at sandbox scale the exact anti-join alone is cheaper — both paths are
     # exact, this only moves work (see operators/seen.py)
     bloom_prefilter: bool = True
-    # pages write path: when an epoch claims <= this many rows, the raw html
-    # rides through the fetch UDF (one corpus scan per epoch, html emitted
-    # from the Arrow batch) and the pages append reads it from the persisted
-    # fetch output. Above it, html is stripped from the Python stage (Arrow
-    # round-trip of ~30 KB/row dominates) and re-attached JVM-side with a
-    # semi-join — two extra corpus scans, the right trade only for giant
-    # epochs over a corpus whose scan is cheap relative to batch volume.
-    carry_html_max_rows: int = 1_000_000
     # claims at or above this size resolve against the corpus with a
     # SHUFFLE_HASH join hint (operators/fetch.resolve_against_corpus):
     # a claim-all batch otherwise broadcasts and hands the Python fetch the
@@ -129,17 +121,6 @@ class TaskConfig:
     # fetch slowdown at 100k rows). Politeness-bounded epochs stay below
     # this and keep the shuffle-free broadcast-resolve plan.
     fetch_shuffle_min_rows: int = 25_000
-    # fetch-output persist level: DISK_ONLY guarantees the one expensive
-    # Python pass never re-executes when the batch is too big for the
-    # storage pool (round-2 lesson: a plain MEMORY_ONLY cache silently
-    # evicts and re-ran the fetch 3x); below this row count MEMORY_AND_DISK
-    # keeps the batch in memory (spilling, never recomputing) and skips the
-    # disk write+read cycle entirely — measured: forcing a 100k-row
-    # html-carrying batch (~2.5 GB) through DISK_ONLY cost the pages and
-    # merge consumers ~100 s each re-reading it from the (slow, shared)
-    # container disk. Threshold aligned with carry_html_max_rows: above it
-    # strip mode drops the heavy columns anyway.
-    disk_persist_min_rows: int = 1_000_000
     # snapshot GC: every K epochs expire all but the last `snapshot_keep`
     # versions of every task table (Iceberg expire_snapshots). Without it a
     # longliving crawl grows one manifest version + one dir-set per epoch
@@ -168,6 +149,13 @@ class TaskConfig:
     def epoch_budget(self) -> int:
         """Global dequeue budget per epoch = rate x epoch length, >= 1."""
         return max(1, int(self.max_items_per_second * self.epoch_seconds))
+
+    @property
+    def uses_seen_set(self) -> bool:
+        """Whether dedup runs through the seen table (bloom/cuckoo prefilter
+        before the exact anti-join) rather than the plain frontier
+        anti-join."""
+        return self.dedup and self.bloom_prefilter
 
 
 # ---------------------------------------------------------------------------

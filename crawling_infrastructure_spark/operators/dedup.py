@@ -564,8 +564,10 @@ def embedding_cosine_neardup(
     shuffles a few MB into #blocks partitions which AQE coalesces into ONE
     task whose join output then explodes 10^3x — measured 1.0 effective
     cores at 2*10^4 vectors. ``broadcast_pairs=True`` broadcasts one side
-    and repartitions the other to the session parallelism (right whenever
-    a block's worth of vectors fits in executor memory); False is the
+    and repartitions the other to the session parallelism. The broadcast
+    ships the WHOLE vector set (every block, not one), and the explicit
+    hint bypasses autoBroadcastJoinThreshold, so it is right only while
+    the entire corpus side fits in executor memory; False is the
     huge-corpus path — a salted (block, salt) shuffle join that splits
     each block's quadratic group across the cluster."""
     from crawling_infrastructure_spark.operators.similarity import (
@@ -598,7 +600,7 @@ def embedding_cosine_neardup(
         .select(
             "id_a",
             "id_b",
-            F.round(F.col("_dot") / (F.col("na") * F.col("nb")), 4).alias("cosine"),
+            F.round(F.try_divide(F.col("_dot"), F.col("na") * F.col("nb")), 4).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )

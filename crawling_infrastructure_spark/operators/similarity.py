@@ -11,7 +11,9 @@
 
 Ranking determinism: cosine is rounded to 4 decimals BEFORE ranking with a
 vec_id tiebreak, so float summation-order noise can't flip ranks between
-engines (Spark vs the DuckDB oracle).
+engines (Spark vs the DuckDB oracle). A zero-norm (zero-length or all-zero)
+vector has no defined cosine: its pairs score NULL via try_divide instead of
+aborting the job under ANSI division.
 """
 
 from __future__ import annotations
@@ -27,7 +29,9 @@ _UNROLL_MAX_DIM = 256
 
 
 def _fixed_dim(df: DataFrame, vec_col: str) -> int | None:
-    """Uniform length of ``vec_col`` arrays, or None when ragged/empty. One
+    """Uniform length of ``vec_col`` arrays, or None when ragged, empty,
+    zero-length or null (size(null) = -1): a 0 or -1 would unroll zero
+    terms and never add the dot column, so those take the fold path. One
     tiny min/max aggregate job — the price of replacing the interpreted
     higher-order fold with unrolled whole-stage-codegen arithmetic in every
     pair expression (guide §1.2 'per-task work'). The unrolled chain is
@@ -39,7 +43,7 @@ def _fixed_dim(df: DataFrame, vec_col: str) -> int | None:
     ).first()
     if row is None or row.lo is None or row.lo != row.hi:
         return None
-    return int(row.lo) if row.lo <= _UNROLL_MAX_DIM else None
+    return int(row.lo) if 0 < row.lo <= _UNROLL_MAX_DIM else None
 
 
 # Terms per Project operator in with_staged_dot. A single 64-term chain
@@ -136,7 +140,7 @@ def cosine_topk_bruteforce(
     ).select(
         "query_id",
         "neighbor_id",
-        F.round(F.col("_dot") / (F.col("nq") * F.col("nc")), 4).alias("cosine"),
+        F.round(F.try_divide(F.col("_dot"), F.col("nq") * F.col("nc")), 4).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -179,7 +183,7 @@ def cosine_topk_blocked(
     ).select(
         "query_id",
         "neighbor_id",
-        F.round(F.col("_dot") / (F.col("nq") * F.col("nc")), 4).alias("cosine"),
+        F.round(F.try_divide(F.col("_dot"), F.col("nq") * F.col("nc")), 4).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -397,8 +401,9 @@ def semdedup(
     no embedding column, so nothing downstream carries vectors.
 
     ``broadcast_pairs`` picks the pair-join strategy: True broadcasts the
-    neighbor side (right whenever one partition's worth of cells fits in
-    executor memory — the sandbox, or per-cell slices at scale); False is
+    neighbor side — the WHOLE vector set, every cell, and the explicit
+    hint bypasses autoBroadcastJoinThreshold — so it is right only while
+    the entire corpus side fits in executor memory (the sandbox); False is
     the 10^9-vector path — a salted shuffle equi-join on (cell, salt)
     that splits each cell's quadratic pair group across ``_parallelism``
     tasks, because a plain cell-keyed shuffle both bottlenecks on
@@ -439,7 +444,7 @@ def semdedup(
     close = (
         with_staged_dot(pairs.filter(F.col("other") < F.col("vec_id")), "ea", "eb", "_dot", dim)
         .filter(
-            F.round(F.col("_dot") / (F.col("na") * F.col("nb")), 4) >= threshold
+            F.round(F.try_divide(F.col("_dot"), F.col("na") * F.col("nb")), 4) >= threshold
         )
         .groupBy("vec_id")
         .agg(F.min("other").alias("dup_of"), F.count("*").alias("n_close"))

@@ -29,6 +29,14 @@ never contains a FAILED row with retries < retry cap (every epoch re-flips
 those to initial before committing, and no other writer produces failed
 rows), so reenqueue_failed restricted to dirty buckets equals the full scan.
 
+The fetch output (html and text of every claimed row) persists
+MEMORY_AND_DISK and feeds the pages append, the merge and the metrics.
+Optional features — debug artifacts, near-dup fold, decontamination audit,
+link priorities, proxy feedback, snapshot GC — are private CrawlJob methods
+that do nothing when their feature is off, so run_epoch is one code path.
+Per-step timing is not done here: ``perfbench/run.py --trace 1`` wraps this
+module's claim_batch/task_finished and the catalog writes it drives.
+
 Kill the driver at ANY point: resume() heals running->initial (U4) from the
 last committed snapshots and re-runs the epoch. Single-writer + atomic
 manifest commit = the race-free version of the reference's heartbeat healing.
@@ -36,10 +44,8 @@ manifest commit = the race-free version of the reference's heartbeat healing.
 
 from __future__ import annotations
 
-import os
 import threading
 import time
-from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -80,34 +86,6 @@ from crawling_infrastructure_spark.operators.seen import (
     update_seen,
 )
 from crawling_infrastructure_spark.schema import FRONTIER_SCHEMA, SEEN_SCHEMA, Status
-
-
-class _Prof:
-    """Per-step wall profile of run_epoch, printed when
-    SPARK_GRAFT_EPOCH_PROFILE=1 — instruments the REAL code path so profile
-    numbers can never diverge from what the loop actually executes (the
-    round-2 profile tool re-implemented the epoch and drifted)."""
-
-    enabled = os.environ.get("SPARK_GRAFT_EPOCH_PROFILE", "") == "1"
-
-    def __init__(self, epoch: int):
-        self.epoch = epoch
-        self.t0 = time.time()
-        self.t: dict[str, float] = {}
-
-    @contextmanager
-    def step(self, name: str):
-        t0 = time.time()
-        yield
-        self.t[name] = round(time.time() - t0, 2)
-
-    def emit(self) -> None:
-        if self.enabled:
-            wall = round(time.time() - self.t0, 2)
-            print({
-                "epoch_profile": self.epoch, **self.t,
-                "steps": round(sum(self.t.values()), 2), "wall": wall,
-            })
 
 
 @dataclass
@@ -242,7 +220,6 @@ class CrawlJob:
         sandbox frontier doesn't pay dozens of tiny files per write. The
         count is persisted in the table manifest, so resume reopens with
         the identical layout whatever the config says."""
-        prof = _Prof(0)
         rows = frontier_rows(seeds, self.cfg.priority, epoch=0)
         if self.region_map is not None:
             rows = assign_regions(rows, self.region_map)
@@ -250,24 +227,14 @@ class CrawlJob:
             rows = filter_allowed(rows, self.spark, self.robots)
         if self.cfg.frontier_buckets is None and not self.frontier_t.exists():
             rows = rows.cache()
-            with prof.step("seed_count"):
-                n_seeds = rows.count()
+            n_seeds = rows.count()
             self.frontier_t.n_buckets = suggest_buckets(n_seeds * self.SEED_GROWTH_FACTOR)
-        with prof.step("frontier_write"):
-            self.frontier_t.write_full(rows, tag="epoch-0")
+        self.frontier_t.write_full(rows, tag="epoch-0")
         rows.unpersist()
         f = self.frontier_t.read(self.spark)
-        if self.cfg.dedup and self.cfg.bloom_prefilter:
-            with prof.step("seen_write"):
-                self.seen_t.write_full(
-                    build_seen(f.select("url_hash"), self.cfg.seen_buckets,
-                               self.cfg.bloom_fpp, kind=self.cfg.seen_prefilter),
-                    tag="epoch-0",
-                )
-        with prof.step("final_count"):
-            n = f.count()
-        prof.emit()
-        return n
+        if self.cfg.uses_seen_set:
+            self._write_seen(f, tag="epoch-0")
+        return f.count()
 
     def resume(self) -> int:
         """Heal after a kill: running -> initial (U4 resetRunningItems) on
@@ -278,18 +245,15 @@ class CrawlJob:
         if dirty:
             fdirty = self.frontier_t.read_buckets(self.spark, dirty, FRONTIER_SCHEMA)
             self.frontier_t.merge_buckets(reset_running(fdirty), dirty, tag="heal")
-        if self.cfg.dedup and self.cfg.bloom_prefilter:
+        if self.cfg.uses_seen_set:
             # restore the seen-set invariant (seen hashes == frontier
             # url_hashes): the epoch loop folds admitted hashes AFTER the
             # frontier merge commits, so a kill between the two leaves the
             # exact shards stale and a stale shard would re-admit a
             # duplicate. One O(frontier) rebuild per resume — resume is a
             # per-crash event, not a per-epoch cost.
-            f2 = self.frontier_t.read(self.spark, FRONTIER_SCHEMA)
-            self.seen_t.write_full(
-                build_seen(f2.select("url_hash"), self.cfg.seen_buckets,
-                           self.cfg.bloom_fpp, kind=self.cfg.seen_prefilter),
-                tag="resume-rebuild",
+            self._write_seen(
+                self.frontier_t.read(self.spark, FRONTIER_SCHEMA), tag="resume-rebuild"
             )
         tags = [
             v["tag"] for v in self.frontier_t.snapshots()
@@ -354,6 +318,14 @@ class CrawlJob:
         return n
 
     # -- seen-set maintenance ----------------------------------------------
+    def _write_seen(self, frontier: DataFrame, tag: str) -> None:
+        """Rebuild the whole seen table from a frontier frame's url_hashes."""
+        self.seen_t.write_full(
+            build_seen(frontier.select("url_hash"), self.cfg.seen_buckets,
+                       self.cfg.bloom_fpp, kind=self.cfg.seen_prefilter),
+            tag=tag,
+        )
+
     def _fold_into_seen(self, new_hashes: DataFrame, tag: str) -> None:
         """Fold url_hashes into the sharded blooms, rewriting only the blobs
         whose bucket receives hashes."""
@@ -428,7 +400,8 @@ class CrawlJob:
         frontier.unpersist()
         return time.time() - t0, n
 
-    # -- one epoch ----------------------------------------------------------
+    # -- optional per-epoch features ------------------------------------------
+    # each is a no-op when its feature is off, so run_epoch calls them all
     def _apply_link_priorities(
         self, light: DataFrame, candidates: DataFrame, epoch: int
     ) -> DataFrame:
@@ -446,6 +419,8 @@ class CrawlJob:
         the standard price of link-informed scheduling: Abiteboul et al.
         WWW'03 OPIC; Nutch's LinkRank job is the same loop). The rank
         table is host-count-bounded, hence the broadcast join."""
+        if self.hostrank_t is None:
+            return candidates
         from crawling_infrastructure_spark.operators.linkrank import host_priorities
 
         canon_host = host_col(canonicalize_url_col(F.col("item")))
@@ -482,10 +457,213 @@ class CrawlJob:
             .select(*cols)
         )
 
+    def _proxy_pool(self) -> DataFrame | None:
+        """Live proxy pool state: the persisted table (previous epochs' marks
+        folded in) once it exists, the caller's bootstrap pool before."""
+        if self.proxies is None:
+            return None
+        return self.proxy_t.read(self.spark) if self.proxy_t.exists() else self.proxies
+
+    def _append_debug(self, results: DataFrame, epoch: int, claimed: int) -> None:
+        """Failed-item debug artifacts (store_browser_debug,
+        crawl_queue.ts:173-180 + handler.ts:178-180): the reference pushes
+        failed ids into worker meta and debug blobs into results; here one
+        append of the failed rows' debug structs per epoch."""
+        if self.debug_t is None:
+            return
+        dbg = results.filter(F.col("status") == Status.FAILED).select(
+            F.lit(epoch).alias("epoch"),
+            "url", "url_hash", "host", "error",
+            F.col("browser_debug.screen_b64").alias("screen_b64"),
+            F.col("browser_debug.document").alias("document"),
+        )
+        self.debug_t.append(dbg.coalesce(max(1, claimed // 500_000)), tag=f"epoch-{epoch}")
+
+    def _fold_neardup(self, results: DataFrame, epoch: int) -> int:
+        """Content-level near-dup fold (cfg.neardup_pages): this epoch's
+        completed pages against the incremental LSH band store. Runs BEFORE
+        the pages append so the history text source is the pre-epoch pages
+        snapshot (exactly the docs already in the store). The pair count
+        rides an Observation on the pairs-log append — no second pass over
+        the verification joins. Returns the detected pair count."""
+        if self.neardup is None:
+            return 0
+        new_docs = results.filter(F.col("status") == Status.COMPLETED).select(
+            F.col("url_hash").alias("doc_id"), "text"
+        )
+        history = (
+            self.pages_t.read(self.spark).select(
+                url_hash_col(F.col("url")).alias("doc_id"), "text"
+            )
+            if self.pages_t.exists()
+            else None
+        )
+        pairs = self.neardup.fold(new_docs, history, tag=f"epoch-{epoch}")
+        nobs = Observation(f"epoch-{epoch}-neardup")
+        self.neardup_pairs_t.append(
+            pairs.observe(nobs, F.count(F.lit(1)).alias("n")).coalesce(1),
+            tag=f"epoch-{epoch}",
+        )
+        n = int(nobs.get["n"] or 0)
+        self.neardup.release()
+        return n
+
+    def _audit_contamination(self, results: DataFrame, epoch: int) -> int:
+        """Benchmark-decontamination audit (eval_docs): probe this epoch's
+        admitted pages against the broadcast eval window set — one scan +
+        explode with a map-side hash probe, no shuffle of page text
+        (operators/corpus.contamination with the precomputed, checkpointed
+        eval_windows) — and log flagged docs with their hit counts. Returns
+        the flagged doc count."""
+        if self.eval_windows is None:
+            return 0
+        from crawling_infrastructure_spark.operators.corpus import contamination
+
+        admitted = results.filter(F.col("status") == Status.COMPLETED).select(
+            "url", F.col("url_hash").alias("doc_id"), "text"
+        )
+        flags = contamination(
+            admitted, None, window=self.cfg.decontam_window, eval_windows=self.eval_windows
+        )
+        flagged = (
+            admitted.select("url", "doc_id")
+            .join(flags, "doc_id")
+            .select(F.lit(epoch).alias("epoch"), "url", "doc_id", "n_eval_windows")
+        )
+        cobs = Observation(f"epoch-{epoch}-contam")
+        self.contam_t.append(
+            flagged.observe(cobs, F.count(F.lit(1)).alias("n")).coalesce(1),
+            tag=f"epoch-{epoch}",
+        )
+        return int(cobs.get["n"] or 0)
+
+    def _feed_back_proxies(self, pool: DataFrame | None, light: DataFrame, epoch: int) -> None:
+        """Proxy rotation feedback (W2 loop): fold this epoch's blocked /
+        check-failed outcomes into the pool and persist, so next epoch's
+        assign_proxies re-ranks — a blocked URL retries through a different
+        proxy (handler.ts:171-176 + proxy.ts:53-122). Pool-sized work: two
+        <=|pool|-row jobs + a single-file write. The reference's Date.now()
+        is monotone; the wall-clock-free stand-in is max(last_used)+1 —
+        every marked proxy sinks behind every untouched one in the LRU key,
+        and replays agree."""
+        if pool is None:
+            return
+        mx = pool.agg(F.max("last_used").alias("m")).collect()[0].m
+        updated = proxy_feedback(
+            light.select("url_hash", "status", "retries_delta"),
+            pool,
+            now_ts=int(mx or 0) + 1,
+        )
+        self.proxy_t.write_full(updated.coalesce(1), tag=f"epoch-{epoch}")
+
+    def _collect_snapshots(self, epoch: int) -> None:
+        """Snapshot GC (Iceberg expire_snapshots) every K epochs: without it
+        a longliving crawl grows one manifest version + dir-set per epoch
+        per table forever — the reference's Mongo updates are in place
+        (queue.model.ts:70-90) and have no such growth. keep_last always
+        covers the latest epoch-K tag, so kill-resume still works."""
+        if not self.cfg.snapshot_gc_epochs or epoch % self.cfg.snapshot_gc_epochs:
+            return
+        keep = self.cfg.snapshot_keep
+        # append-mode tables (pages/metrics) gain one data dir per epoch
+        # forever without compaction — expire_snapshots alone never deletes
+        # a dir the current version still references (VERDICT r3 what's-wrong
+        # #3). Size-tiered compaction first bounds the current dir list;
+        # expiry then retires the dirs only old versions reference.
+        max_dirs = keep + self.cfg.snapshot_gc_epochs
+        for t in (self.pages_t, self.metrics_t):
+            t.compact_small(self.spark, max_dirs=max_dirs)
+        for t in (self.frontier_t, self.pages_t, self.metrics_t, self.seen_t):
+            t.expire_snapshots(keep_last=keep)
+
+    # -- one epoch ----------------------------------------------------------
+    def _snapshot_claim(
+        self, frontier: DataFrame, claimed: DataFrame, tag: str
+    ) -> list[int] | None:
+        """Commit the initial->running transition as its own snapshot when
+        claim_snapshot is on; returns the claimed rows' dirty buckets then,
+        None otherwise."""
+        if not self.claim_snapshot:
+            return None
+        # single-bucket layout: the dirty set is trivially {0} and the dirty
+        # read IS the cached frontier — no collect job, no extra scan
+        if self.frontier_t.n_buckets == 1:
+            dirty, fdirty = [0], frontier
+        else:
+            dirty = self.frontier_t.bucket_ids_of(claimed)
+            fdirty = self.frontier_t.read_buckets(self.spark, dirty, FRONTIER_SCHEMA)
+        self.frontier_t.merge_buckets(mark_running(fdirty, claimed), dirty, tag=f"{tag}-claim")
+        return dirty
+
+    def _fetch(
+        self, claimed: DataFrame, n_claimed: int, epoch: int, pool: DataFrame | None
+    ) -> DataFrame:
+        """The persisted fetch output of the claimed batch (lazy: the
+        metrics append materializes it). Raw html rides through the fetch
+        UDF and the pages append reads it from the persisted output — ONE
+        corpus scan per epoch (round 2 stripped html from the Arrow
+        round-trip and re-joined it JVM-side: two more corpus scans, a
+        per-epoch fixed cost at sandbox scale, VERDICT r2 item 1c)."""
+        fetcher = HermeticFetcher(
+            epoch=epoch, outcome_fn=self.outcome_fn, func=self.crawl_fn,
+            carry_html=True, store_debug=self.cfg.store_browser_debug,
+        )
+        # MEMORY_AND_DISK: the fetch output carries the extracted text and
+        # the html (tens of KB/row); a plain in-memory cache silently evicts
+        # under that volume and every downstream consumer re-runs the Python
+        # fetch (measured: 3x re-execution in round 2's 200k-page profile).
+        # Spilling instead of recomputing guarantees exactly-one execution
+        # of the expensive pass, without DISK_ONLY's write+read cycle
+        # (measured: a 100k-row html-carrying batch through DISK_ONLY cost
+        # the pages and merge consumers ~100 s each re-reading it).
+        return fetch_batch(
+            claimed,
+            self.corpus,
+            fetcher,
+            shuffle=n_claimed >= self.cfg.fetch_shuffle_min_rows,
+            fingerprints=self.cfg.fingerprint_rotation,
+            proxies=pool,
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+
+    def _grow(
+        self, light: DataFrame, frontier: DataFrame, epoch: int, scratch: list
+    ) -> DataFrame:
+        """Frontier growth: this epoch's outlinks -> candidate rows ->
+        (link priorities, regions, robots) -> the cached rows whose url_hash
+        is not in the frontier yet. The anti-join target is the pre-merge
+        frontier snapshot — the merge only changes statuses, never the
+        url_hash set."""
+        outlinks = light.select(F.explode("outlinks").alias("item"))
+        candidates = frontier_rows(outlinks, self.cfg.priority, epoch=epoch)
+        candidates = self._apply_link_priorities(light, candidates, epoch)
+        if self.region_map is not None:
+            candidates = assign_regions(candidates, self.region_map)
+        if self.cfg.respect_robots:
+            candidates = filter_allowed(candidates, self.spark, self.robots)
+        if self.cfg.uses_seen_set:
+            if not self.seen_t.exists():
+                # frontier seeded outside init_task (e.g. streaming
+                # ingest, plans/streaming): bootstrap the blooms lazily
+                self._write_seen(frontier, tag=f"epoch-{epoch}-bootstrap")
+            seen = self.seen_t.read(self.spark, SEEN_SCHEMA)
+            return filter_unseen(
+                candidates, seen, self.cfg.seen_buckets, scratch=scratch
+            ).cache()
+        if self.cfg.dedup:
+            # exact-only path: the frontier IS the seen set; at sandbox
+            # scale the plain anti-join beats bloom cogroup round-trips
+            return candidates.join(
+                frontier.select("url_hash"), "url_hash", "left_anti"
+            ).cache()
+        return candidates.cache()  # reference semantics: dups permitted
+
     def run_epoch(self, epoch: int) -> EpochStats:
+        """One claim -> fetch -> pages -> grow -> merge -> seen pass. The
+        optional features run through the helpers above, each a no-op when
+        its feature is off."""
         stats = EpochStats(epoch=epoch)
-        prof = _Prof(epoch)
         nb = self.frontier_t.n_buckets
+        tag = f"epoch-{epoch}"
         # snapshot + claim source per layout — see _claim_frame. (The
         # post-claim intermediate version never needs re-reading: every
         # claimed row's status is overwritten from the fetch results anyway,
@@ -493,227 +671,67 @@ class CrawlJob:
         # state; the claim snapshot stays on disk for resume.)
         frontier, claim_src = self._claim_frame()
 
-        with prof.step("claim"):
-            budget = self._adaptive_budget() if self.cfg.adaptive_budget else None
-            claimed, stats.claimed = claim_batch(
-                claim_src, self.cfg, with_count=True, budget=budget,
-                # the slim-join scale path assumes url_hash-unique frontiers
-                # (claim_batch docstring) — exactly the dedup invariant
-                local_topk=nb > 1 and self.cfg.dedup,
-            )
+        # 1. claim
+        budget = self._adaptive_budget() if self.cfg.adaptive_budget else None
+        claimed, stats.claimed = claim_batch(
+            claim_src, self.cfg, with_count=True, budget=budget,
+            # the slim-join scale path assumes url_hash-unique frontiers
+            # (claim_batch docstring) — exactly the dedup invariant
+            local_topk=nb > 1 and self.cfg.dedup,
+        )
         if stats.claimed == 0:
             frontier.unpersist()
             stats.finished = not self.cfg.longliving
             return stats
         claimed = claimed.cache()
-        dirty_claim: list[int] | None = None
-        if self.claim_snapshot:
-            with prof.step("claim_snapshot"):
-                # single-bucket layout: the dirty set is trivially {0} and
-                # the dirty read IS the cached frontier — no collect job, no
-                # extra scan
-                if nb == 1:
-                    dirty_claim, fdirty = [0], frontier
-                else:
-                    dirty_claim = self.frontier_t.bucket_ids_of(claimed)
-                    fdirty = self.frontier_t.read_buckets(
-                        self.spark, dirty_claim, FRONTIER_SCHEMA
-                    )
-                self.frontier_t.merge_buckets(
-                    mark_running(fdirty, claimed), dirty_claim, tag=f"epoch-{epoch}-claim"
-                )
+        dirty_claim = self._snapshot_claim(frontier, claimed, tag)
 
-        # carry mode (batch <= carry_html_max_rows, the common politeness-
-        # bounded epoch): raw html rides through the fetch UDF and the pages
-        # append reads it from the persisted output — ONE corpus scan per
-        # epoch. Strip mode (giant epochs): html is dropped from the Arrow
-        # round-trip and re-attached JVM-side below at the cost of two more
-        # corpus scans. Round 2 always stripped; at sandbox scale the two
-        # re-joins were a per-epoch fixed cost (VERDICT r2 item 1c).
-        carry = stats.claimed <= self.cfg.carry_html_max_rows
-        fetcher = HermeticFetcher(
-            epoch=epoch, outcome_fn=self.outcome_fn, func=self.crawl_fn,
-            carry_html=carry, store_debug=self.cfg.store_browser_debug,
-        )
-        # DISK_ONLY: the fetch output carries the extracted text (and in
-        # carry mode the html — tens of KB/row; a big batch can be 10s of
-        # GB); an in-memory cache silently evicts under that volume and
-        # every downstream consumer re-runs the Python fetch (measured: 3x
-        # re-execution in round 2's 200k-page profile). Spilling the one
-        # expensive pass to local disk guarantees exactly-one execution;
-        # small batches skip the disk round-trip (MEMORY_AND_DISK spills,
-        # never recomputes). The small columns the merge/growth/metrics
-        # steps need are a separate in-memory cache (~KB/row).
-        level = (
-            StorageLevel.DISK_ONLY
-            if stats.claimed >= self.cfg.disk_persist_min_rows
-            else StorageLevel.MEMORY_AND_DISK
-        )
-        # live pool state: the persisted table (previous epochs' marks
-        # folded in) once it exists, the caller's bootstrap pool before
-        pool = None
-        if self.proxies is not None:
-            pool = (
-                self.proxy_t.read(self.spark)
-                if self.proxy_t.exists()
-                else self.proxies
-            )
-        results = fetch_batch(
-            claimed,
-            self.corpus,
-            fetcher,
-            shuffle=stats.claimed >= self.cfg.fetch_shuffle_min_rows,
-            fingerprints=self.cfg.fingerprint_rotation,
-            proxies=pool,
-        ).persist(level)
+        # 2. fetch
+        pool = self._proxy_pool()
+        results = self._fetch(claimed, stats.claimed, epoch, pool)
         # 6-first: the metrics append doubles as the epoch-stats source — the
         # sums (and the claimed rows' dirty-bucket set, VERDICT r2 item 1b)
         # ride an Observation on the light frame, so materializing the fetch
         # inside the metrics WRITE job yields them for free: no separate agg
         # job ever runs. host_hash == xxhash64(host) by construction
-        # (operators/frontier.frontier_rows).
+        # (operators/frontier.frontier_rows). The light frame is NOT cached
+        # separately: the in-memory columnar cache of results already
+        # serves pruned column batches.
         host_bkt = F.pmod(F.xxhash64(F.col("host")), F.lit(nb)).cast("int")
-        obs = Observation(f"epoch-{epoch}-stats")
-        light_sel = (
-            results.select(
-                "url", "url_hash", "host", "status", "retries_delta", "error",
-                "warc_ts", "outlinks", "bytes_fetched", "elapsed_ms",
-            )
-            .observe(
-                obs,
-                F.count(F.when(F.col("status") == Status.COMPLETED, 1)).alias("completed"),
-                F.count(
-                    F.when(
-                        (F.col("status") == Status.FAILED) & (F.col("retries_delta") > 0), 1
-                    )
-                ).alias("failed"),
-                F.count(
-                    F.when(
-                        (F.col("status") == Status.FAILED) & (F.col("retries_delta") == 0), 1
-                    )
-                ).alias("blocked"),
-                F.sum("bytes_fetched").alias("bytes"),
-                F.collect_set(host_bkt).alias("bkts"),
-            )
+        obs = Observation(f"{tag}-stats")
+        completed = F.col("status") == Status.COMPLETED
+        failed = F.col("status") == Status.FAILED
+        light = results.select(
+            "url", "url_hash", "host", "status", "retries_delta", "error",
+            "warc_ts", "outlinks", "bytes_fetched", "elapsed_ms",
+        ).observe(
+            obs,
+            F.count(F.when(completed, 1)).alias("completed"),
+            F.count(F.when(failed & (F.col("retries_delta") > 0), 1)).alias("failed"),
+            F.count(F.when(failed & (F.col("retries_delta") == 0), 1)).alias("blocked"),
+            F.sum("bytes_fetched").alias("bytes"),
+            F.collect_set(host_bkt).alias("bkts"),
         )
-        # the separate light cache only pays when results sit on DISK_ONLY
-        # (re-reading tens-of-KB html rows per consumer); an in-memory
-        # columnar cache already serves pruned column batches, so a second
-        # cache of the same columns would just burn a materialization pass
-        light = light_sel.cache() if level == StorageLevel.DISK_ONLY else light_sel
-        metrics = epoch_metrics(light, epoch)
         # metric rows are one per (epoch, host) — tiny relative to the batch;
         # writing them at inherited shuffle width cost ~4 s of empty-task
         # overhead per epoch in round 2 (VERDICT r2 item 1e)
-        with prof.step("fetch_and_metrics_append"):
-            self.metrics_t.append(
-                metrics.coalesce(max(1, stats.claimed // 500_000)), tag=f"epoch-{epoch}"
-            )
+        self.metrics_t.append(
+            epoch_metrics(light, epoch).coalesce(max(1, stats.claimed // 500_000)), tag=tag
+        )
         # obs.get is NOT read here: the listener delivers metrics
         # asynchronously after the action returns, so the .get blocks for
         # free wall time if called back-to-back with the write — the stats
         # are pulled at epoch end (or just-in-time below where the bucketed
         # layout needs claim_bkts for the dirty set) while other jobs run
 
-        # failed-item debug artifacts (store_browser_debug,
-        # crawl_queue.ts:173-180 + handler.ts:178-180): the reference pushes
-        # failed ids into worker meta and debug blobs into results; here one
-        # append of the failed rows' debug structs per epoch
-        if self.debug_t is not None:
-            with prof.step("debug_append"):
-                dbg = results.filter(F.col("status") == Status.FAILED).select(
-                    F.lit(epoch).alias("epoch"),
-                    "url", "url_hash", "host", "error",
-                    F.col("browser_debug.screen_b64").alias("screen_b64"),
-                    F.col("browser_debug.document").alias("document"),
-                )
-                self.debug_t.append(
-                    dbg.coalesce(max(1, stats.claimed // 500_000)),
-                    tag=f"epoch-{epoch}",
-                )
-
-        # content-level near-dup fold (cfg.neardup_pages): this epoch's
-        # completed pages against the incremental LSH band store. Runs
-        # BEFORE the pages append so the history text source is the
-        # pre-epoch pages snapshot (exactly the docs already in the store).
-        # The pair count rides an Observation on the pairs-log append — no
-        # second pass over the verification joins.
-        if self.neardup is not None and stats.claimed:
-            with prof.step("neardup_fold"):
-                new_docs = results.filter(
-                    F.col("status") == Status.COMPLETED
-                ).select(F.col("url_hash").alias("doc_id"), "text")
-                history = (
-                    self.pages_t.read(self.spark).select(
-                        url_hash_col(F.col("url")).alias("doc_id"), "text"
-                    )
-                    if self.pages_t.exists()
-                    else None
-                )
-                pairs = self.neardup.fold(new_docs, history, tag=f"epoch-{epoch}")
-                nobs = Observation(f"epoch-{epoch}-neardup")
-                self.neardup_pairs_t.append(
-                    pairs.observe(nobs, F.count(F.lit(1)).alias("n")).coalesce(1),
-                    tag=f"epoch-{epoch}",
-                )
-                stats.neardup_pairs = int(nobs.get["n"] or 0)
-                self.neardup.release()
-
-        # benchmark-decontamination audit (eval_docs): probe this epoch's
-        # admitted pages against the broadcast eval window set — one scan +
-        # explode with a map-side hash probe, no shuffle of page text
-        # (operators/corpus.contamination with the precomputed, checkpointed
-        # eval_windows) — and log flagged docs with their hit counts.
-        if self.eval_windows is not None and stats.claimed:
-            with prof.step("decontam_audit"):
-                from crawling_infrastructure_spark.operators.corpus import (
-                    contamination,
-                )
-
-                admitted = results.filter(
-                    F.col("status") == Status.COMPLETED
-                ).select("url", F.col("url_hash").alias("doc_id"), "text")
-                flags = contamination(
-                    admitted,
-                    None,
-                    window=self.cfg.decontam_window,
-                    eval_windows=self.eval_windows,
-                )
-                flagged = (
-                    admitted.select("url", "doc_id")
-                    .join(flags, "doc_id")
-                    .select(
-                        F.lit(epoch).alias("epoch"),
-                        "url",
-                        "doc_id",
-                        "n_eval_windows",
-                    )
-                )
-                cobs = Observation(f"epoch-{epoch}-contam")
-                self.contam_t.append(
-                    flagged.observe(cobs, F.count(F.lit(1)).alias("n")).coalesce(1),
-                    tag=f"epoch-{epoch}",
-                )
-                stats.contam_docs = int(cobs.get["n"] or 0)
+        self._append_debug(results, epoch, stats.claimed)
+        stats.neardup_pairs = self._fold_neardup(results, epoch)
+        stats.contam_docs = self._audit_contamination(results, epoch)
 
         # 3. pages append — columnar write replaces N S3 puts (S6/S7).
-        if carry:
-            pages_rows = results.filter(F.col("status") == Status.COMPLETED).select(
-                "url", "item_key", "warc_ts", "html", "text", "lang"
-            )
-        else:
-            # strip mode: semi-prune the corpus scan by the completed urls
-            # (AQE broadcasts the small side), then an equi-join re-attaches
-            # html to the extracted text.
-            completed = results.filter(F.col("status") == Status.COMPLETED).select(
-                "url", "item_key", "warc_ts", "text", "lang"
-            )
-            corpus_hit = self.corpus.select("url", "html").join(
-                completed.select("url"), "url", "left_semi"
-            )
-            pages_rows = completed.join(corpus_hit, "url", "left").select(
-                "url", "item_key", "warc_ts", "html", "text", "lang"
-            )
+        pages_rows = results.filter(completed).select(
+            "url", "item_key", "warc_ts", "html", "text", "lang"
+        )
         # SMALL epochs only: the pages append and the frontier merge touch
         # different tables and both consume the already-materialized
         # in-memory fetch cache, so the pages job runs on a sibling thread
@@ -724,72 +742,30 @@ class CrawlJob:
         # re-inflating the html-bearing cache thrash memory+disk (100k-row
         # epoch: 279s + 294s overlapped vs ~20s each serial) — so anything
         # above the small-claim bound runs sequentially.
-        # SPARK_GRAFT_NO_OVERLAP=1 forces the serial path — bisection knob
-        # for adjudicating whether the sibling-thread overlap causes
-        # timing-dependent slowdowns on a contended host.
-        overlap = stats.claimed < self.cfg.fetch_shuffle_min_rows and not os.environ.get(
-            "SPARK_GRAFT_NO_OVERLAP"
-        )
         pages_err: list[BaseException] = []
 
         def _pages_job():
             try:
-                with prof.step("pages_append"):
-                    self.pages_t.append(pages_rows, tag=f"epoch-{epoch}")
+                self.pages_t.append(pages_rows, tag=tag)
             except BaseException as e:  # surfaced after join below
                 pages_err.append(e)
 
         pages_thread: threading.Thread | None = None
-        if overlap:
+        if stats.claimed < self.cfg.fetch_shuffle_min_rows:
             pages_thread = threading.Thread(target=_pages_job, daemon=True)
             pages_thread.start()
         else:
             _pages_job()
 
-        # 5. frontier growth: outlinks -> dedup -> new initial rows. The
-        # anti-join target is the pre-merge frontier snapshot — the merge
-        # only changes statuses, never the url_hash set.
+        # 5. frontier growth: outlinks -> dedup -> new initial rows.
         # Everything between the pages-thread start and its join runs under
         # try/finally: if the growth agg or merge raises, the orphaned
         # daemon thread could otherwise still commit the pages append in the
         # background, and a caller that catches + retries the epoch would
         # double-append this epoch's rows.
-        outlinks = light.select(F.explode("outlinks").alias("item"))
         scratch: list = []
         try:
-            candidates = frontier_rows(outlinks, self.cfg.priority, epoch=epoch)
-            if self.hostrank_t is not None:
-                with prof.step("link_rank"):
-                    candidates = self._apply_link_priorities(light, candidates, epoch)
-            if self.region_map is not None:
-                candidates = assign_regions(candidates, self.region_map)
-            if self.cfg.respect_robots:
-                candidates = filter_allowed(candidates, self.spark, self.robots)
-            if self.cfg.dedup and self.cfg.bloom_prefilter:
-                if not self.seen_t.exists():
-                    # frontier seeded outside init_task (e.g. streaming
-                    # ingest, plans/streaming): bootstrap the blooms lazily
-                    self.seen_t.write_full(
-                        build_seen(
-                            frontier.select("url_hash"),
-                            self.cfg.seen_buckets,
-                            self.cfg.bloom_fpp,
-                            kind=self.cfg.seen_prefilter,
-                        ),
-                        tag=f"epoch-{epoch}-bootstrap",
-                    )
-                seen = self.seen_t.read(self.spark, SEEN_SCHEMA)
-                new_rows = filter_unseen(
-                    candidates, seen, self.cfg.seen_buckets, scratch=scratch
-                ).cache()
-            elif self.cfg.dedup:
-                # exact-only path: the frontier IS the seen set; at sandbox
-                # scale the plain anti-join beats bloom cogroup round-trips
-                new_rows = candidates.join(
-                    frontier.select("url_hash"), "url_hash", "left_anti"
-                ).cache()
-            else:
-                new_rows = candidates.cache()  # reference semantics: dups permitted
+            new_rows = self._grow(light, frontier, epoch, scratch)
             grow_obs = None
             if nb == 1:
                 # single-bucket layout (a frontier below ~1M rows): the dirty
@@ -799,7 +775,7 @@ class CrawlJob:
                 # unpersist must target the plan the cache was registered
                 # under, not the CollectMetrics wrapper)
                 scratch.append(new_rows)
-                grow_obs = Observation(f"epoch-{epoch}-growth")
+                grow_obs = Observation(f"{tag}-growth")
                 new_rows = new_rows.observe(grow_obs, F.count(F.lit(1)).alias("n"))
                 new_bkts = [0]
             else:
@@ -807,11 +783,10 @@ class CrawlJob:
                 # be known BEFORE the merge to scope its reads, so one tiny
                 # job returns both the growth count and the new rows' buckets
                 # (collect_set over <= n_buckets ints — VERDICT r2 item 1b)
-                with prof.step("growth_agg"):
-                    grow = new_rows.agg(
-                        F.count("*"),
-                        F.collect_set(F.pmod(F.col("host_hash"), F.lit(nb)).cast("int")),
-                    ).collect()[0]
+                grow = new_rows.agg(
+                    F.count("*"),
+                    F.collect_set(F.pmod(F.col("host_hash"), F.lit(nb)).cast("int")),
+                ).collect()[0]
                 stats.new_urls = int(grow[0])
                 new_bkts = [int(b) for b in (grow[1] or [])]
 
@@ -830,20 +805,17 @@ class CrawlJob:
                 else ([0] if nb == 1 else [int(b) for b in (obs.get["bkts"] or [])])
             )
             dirty = sorted(set(claim_bkts) | set(new_bkts))
-            with prof.step("frontier_merge_write"):
-                fdirty = (
-                    frontier  # cached epoch snapshot IS the single dirty bucket
-                    if nb == 1
-                    else self.frontier_t.read_buckets(self.spark, dirty, FRONTIER_SCHEMA)
-                )
-                merged_dirty = reenqueue_failed(
-                    merge_results(fdirty, light), self.cfg.retry_failed_items
-                )
-                self.frontier_t.merge_buckets(
-                    merged_dirty.unionByName(new_rows.select(*FRONTIER_COLS)),
-                    dirty,
-                    tag=f"epoch-{epoch}",
-                )
+            fdirty = (
+                frontier  # cached epoch snapshot IS the single dirty bucket
+                if nb == 1
+                else self.frontier_t.read_buckets(self.spark, dirty, FRONTIER_SCHEMA)
+            )
+            merged_dirty = reenqueue_failed(
+                merge_results(fdirty, light), self.cfg.retry_failed_items
+            )
+            self.frontier_t.merge_buckets(
+                merged_dirty.unionByName(new_rows.select(*FRONTIER_COLS)), dirty, tag=tag
+            )
         finally:
             if pages_thread is not None:
                 pages_thread.join()
@@ -858,66 +830,26 @@ class CrawlJob:
         stats.bytes_fetched = int(agg["bytes"] or 0)
         if grow_obs is not None:
             stats.new_urls = int(grow_obs.get["n"] or 0)
-        if self.cfg.dedup and self.cfg.bloom_prefilter and stats.new_urls:
-            with prof.step("seen_fold"):
-                self._fold_into_seen(new_rows.select("url_hash"), tag=f"epoch-{epoch}")
+        if self.cfg.uses_seen_set and stats.new_urls:
+            self._fold_into_seen(new_rows.select("url_hash"), tag=tag)
 
-        # proxy rotation feedback (W2 loop): fold this epoch's blocked /
-        # check-failed outcomes into the pool and persist, so next epoch's
-        # assign_proxies re-ranks — a blocked URL retries through a
-        # different proxy (handler.ts:171-176 + proxy.ts:53-122). Pool-sized
-        # work: two <=|pool|-row jobs + a single-file write. The reference's
-        # Date.now() is monotone; the wall-clock-free stand-in is
-        # max(last_used)+1 — every marked proxy sinks behind every untouched
-        # one in the LRU key, and replays agree.
-        if pool is not None:
-            with prof.step("proxy_feedback"):
-                mx = pool.agg(F.max("last_used").alias("m")).collect()[0].m
-                updated = proxy_feedback(
-                    light.select("url_hash", "status", "retries_delta"),
-                    pool,
-                    now_ts=int(mx or 0) + 1,
-                )
-                self.proxy_t.write_full(updated.coalesce(1), tag=f"epoch-{epoch}")
-
+        self._feed_back_proxies(pool, light, epoch)
         frontier.unpersist()
         claimed.unpersist()
-        light.unpersist()
         results.unpersist()
         new_rows.unpersist()
         for df in scratch:
             df.unpersist()
-
-        # 7b. snapshot GC (Iceberg expire_snapshots) every K epochs: without
-        # it a longliving crawl grows one manifest version + dir-set per
-        # epoch per table forever — the reference's Mongo updates are in
-        # place (queue.model.ts:70-90) and have no such growth. keep_last
-        # always covers the latest epoch-K tag, so kill-resume still works.
-        if self.cfg.snapshot_gc_epochs and epoch % self.cfg.snapshot_gc_epochs == 0:
-            with prof.step("snapshot_gc"):
-                keep = self.cfg.snapshot_keep
-                # append-mode tables (pages/metrics) gain one data dir per
-                # epoch forever without compaction — expire_snapshots alone
-                # never deletes a dir the current version still references
-                # (VERDICT r3 what's-wrong #3). Size-tiered compaction first
-                # bounds the current dir list; expiry then retires the dirs
-                # only old versions reference.
-                max_dirs = keep + self.cfg.snapshot_gc_epochs
-                for t in (self.pages_t, self.metrics_t):
-                    t.compact_small(self.spark, max_dirs=max_dirs)
-                for t in (self.frontier_t, self.pages_t, self.metrics_t, self.seen_t):
-                    t.expire_snapshots(keep_last=keep)
+        self._collect_snapshots(epoch)
 
         # 7. termination predicate (A2) — new initial rows (discoveries or
         # retryable re-enqueues) imply not-finished without another job
         if stats.new_urls > 0:
             stats.finished = False
         else:
-            with prof.step("finish_check"):
-                stats.finished = not self.cfg.longliving and task_finished(
-                    self.frontier_t.read(self.spark, FRONTIER_SCHEMA), self.cfg.retry_failed_items
-                )
-        prof.emit()
+            stats.finished = not self.cfg.longliving and task_finished(
+                self.frontier_t.read(self.spark, FRONTIER_SCHEMA), self.cfg.retry_failed_items
+            )
         return stats
 
     def run(self, seeds: DataFrame | None = None, max_epochs: int = 50) -> list[EpochStats]:

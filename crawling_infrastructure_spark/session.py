@@ -69,9 +69,10 @@ def get_spark(
             "spark.driver.extraJavaOptions",
             os.environ.get("SPARK_GRAFT_JAVA_OPTS", ""),
         )
-        # the epoch persists its heavy fetch output DISK_ONLY (plans/epoch.py);
-        # compressing those blocks (lz4) trades serial disk bandwidth for
-        # parallel CPU — the right side of the trade at every cluster size
+        # the epoch persists its heavy fetch output MEMORY_AND_DISK
+        # (plans/epoch.py); compressing the spilled blocks (lz4) trades
+        # serial disk bandwidth for parallel CPU — the right side of the
+        # trade at every cluster size
         .config("spark.rdd.compress", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

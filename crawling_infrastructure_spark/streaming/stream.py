@@ -71,7 +71,7 @@ def run_seed_ingest(
             return
         current = job.frontier_t.read(spark)
         scratch: list = []
-        if job.cfg.dedup and job.cfg.bloom_prefilter and job.seen_t.exists():
+        if job.cfg.uses_seen_set and job.seen_t.exists():
             rows = filter_unseen(
                 rows, job.seen_t.read(spark), job.cfg.seen_buckets,
                 scratch=scratch,

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from crawling_infrastructure_spark.session import get_spark
@@ -10,7 +12,7 @@ N_PAGES, N_HOSTS = 300, 6
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="pytest", cpus=8)
+    s = get_spark(app_name="pytest", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     yield s
     s.stop()
 

@@ -9,6 +9,7 @@ pre-optimization formulation, re-expressed inline:
 - lm_score broadcast_model=False (shuffle joins) == True (broadcasts)
 - minhash signatures over the occurrence stream == over the distinct set
 - contamination join-then-distinct == distinct-then-join counts
+- degenerate vectors (zero-length, all-null) take the fold path
 """
 
 from __future__ import annotations
@@ -177,3 +178,21 @@ def test_contamination_join_then_distinct(spark):
     got = {r.doc_id: r.n_eval_windows
            for r in contamination(tr, ev, window=4).collect()}
     assert got == {1: 1}
+
+
+@pytest.mark.parametrize("vec", [[], None], ids=["zero_length", "all_null"])
+def test_degenerate_vectors_take_fold_path(spark, monkeypatch, vec):
+    # size([]) = 0 and size(null) = -1: an unrolled dot of zero terms would
+    # never add the _dot column, so _fixed_dim must report None and the
+    # search must equal the dim=None fold result instead of raising
+    from crawling_infrastructure_spark.operators import similarity
+
+    emb = spark.createDataFrame(
+        [(i, vec) for i in range(4)], "vec_id long, embedding array<float>"
+    )
+    assert _fixed_dim(emb, "embedding") is None
+    got = similarity.cosine_topk_bruteforce(emb, emb, k=2)
+    monkeypatch.setattr(similarity, "_fixed_dim", lambda df, col: None)
+    want = similarity.cosine_topk_bruteforce(emb, emb, k=2)
+    assert got.count() == want.count() == 8
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0

@@ -1,5 +1,5 @@
 """Round-3 surfaces: adaptive bucket sizing + manifest-persisted layout,
-snapshot GC for longliving crawls, html carry-vs-strip page parity, the
+snapshot GC for longliving crawls, pages carrying the corpus html, the
 item_key (F10 getKey) column, pandas-callable reenqueue predicates, the
 sorted signed-safe streaming-dedup state, and toFixed-parity rounding."""
 
@@ -105,7 +105,7 @@ def test_reenqueue_pandas_callable_predicate(spark, corpus, tmp_path):
         assert expect <= flipped
 
 
-# -- html carry vs strip: identical pages, item_key = getKey(url) ------------
+# -- pages carry the corpus html byte-for-byte, item_key = getKey(url) -------
 
 def _run_once(spark, corpus, root, task_id, **cfg_kw):
     cfg = TaskConfig(task_id=task_id, max_items_per_second=10, **cfg_kw)
@@ -114,22 +114,25 @@ def _run_once(spark, corpus, root, task_id, **cfg_kw):
     return job
 
 
-def test_carry_and_strip_modes_produce_identical_pages(spark, corpus, tmp_path):
-    carry = _run_once(spark, corpus, str(tmp_path / "c1"), "carry")   # default: carry
-    strip = _run_once(
-        spark, corpus, str(tmp_path / "c2"), "strip", carry_html_max_rows=0
-    )
+def test_pages_carry_corpus_html_text_lang_and_md5_item_key(spark, corpus, tmp_path):
+    job = _run_once(spark, corpus, str(tmp_path / "c1"), "carry")
     cols = ["url", "item_key", "html", "text", "lang"]
-    a = {r["url"]: r for r in carry.pages_t.read(spark).select(cols).collect()}
-    b = {r["url"]: r for r in strip.pages_t.read(spark).select(cols).collect()}
-    assert set(a) == set(b) and a
+    a = {r["url"]: r for r in job.pages_t.read(spark).select(cols).collect()}
+    assert a
+    b = {
+        r["url"]: r
+        for r in corpus.select("url", "html", "text", "lang")
+        .join(job.pages_t.read(spark).select("url"), "url", "left_semi")
+        .collect()
+    }
+    assert set(a) == set(b)
     for url, ra in a.items():
         rb = b[url]
-        assert bytes(ra["html"] or b"") == bytes(rb["html"] or b"")
+        assert ra["html"]  # the fetch must actually deliver the bytes
+        assert bytes(ra["html"]) == bytes(rb["html"])
         assert ra["text"] == rb["text"] and ra["lang"] == rb["lang"]
         # F10: default getKey is md5(url) (crawler/src/worker.ts getKey)
-        assert ra["item_key"] == hashlib.md5(url.encode()).hexdigest() == rb["item_key"]
-        assert ra["html"]  # carry mode must actually deliver the bytes
+        assert ra["item_key"] == hashlib.md5(url.encode()).hexdigest()
 
 
 def test_custom_get_key_reaches_pages(spark, corpus, tmp_path):
