@@ -114,13 +114,6 @@ class TaskConfig:
     # at sandbox scale the exact anti-join alone is cheaper — both paths are
     # exact, this only moves work (see operators/seen.py)
     bloom_prefilter: bool = True
-    # claims at or above this size resolve against the corpus with a
-    # SHUFFLE_HASH join hint (operators/fetch.resolve_against_corpus):
-    # a claim-all batch otherwise broadcasts and hands the Python fetch the
-    # corpus scan's byte-balanced but ROW-skewed splits (measured 4-17x
-    # fetch slowdown at 100k rows). Politeness-bounded epochs stay below
-    # this and keep the shuffle-free broadcast-resolve plan.
-    fetch_shuffle_min_rows: int = 25_000
     # snapshot GC: every K epochs expire all but the last `snapshot_keep`
     # versions of every task table (Iceberg expire_snapshots). Without it a
     # longliving crawl grows one manifest version + one dir-set per epoch

@@ -24,35 +24,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from crawling_infrastructure_spark.operators import physical
 from crawling_infrastructure_spark.operators.dedup import (
     connected_components,
     minhash_lsh_pairs,
 )
+from crawling_infrastructure_spark.operators.physical import (  # noqa: F401
+    release_checkpoints,  # re-exported: callers drain checkpoints from here
+)
 from crawling_infrastructure_spark.operators.textstats import token_counts
-
-# Live localCheckpoint handles created by build_training_corpus. The
-# checkpointed survivor blocks persist for the session lifetime unless
-# unpersisted; a caller that re-runs the funnel (bench retry loops, repeated
-# driver queries) must drain them between runs via release_checkpoints().
-_live_checkpoints: list[DataFrame] = []
-
-
-def release_checkpoints() -> int:
-    """Unpersist every survivor checkpoint created since the last release,
-    plus the component checkpoints dedup.connected_components parked.
-    Safe to call at any time (idempotent, exception-tolerant: the session
-    may already be gone). Returns the number released."""
-    from crawling_infrastructure_spark.operators import dedup as _dedup
-
-    n = _dedup.release_checkpoints()
-    while _live_checkpoints:
-        df = _live_checkpoints.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
 
 
 def build_training_corpus(
@@ -62,7 +42,6 @@ def build_training_corpus(
     min_tokens: int = 20,
     max_tokens: int = 1 << 20,
     minhash_threshold: float = 0.8,
-    materialize_survivors: bool = True,
     eval_docs: DataFrame | None = None,
     decontam_window: int = 8,
 ) -> DataFrame:
@@ -81,26 +60,20 @@ def build_training_corpus(
     # set is ONE projection + filter over ONE scan — the previous
     # lang_id/quality_score joins recombined three projections of the same
     # table through two extra joins (identical values, three scans)
-    from crawling_infrastructure_spark.operators.dedup import _widen
     from crawling_infrastructure_spark.operators.textstats import (
         lang_best_struct,
         quality_exprs,
     )
 
-    if materialize_survivors:
-        # Materialize the (doc_id, text) input once, widened to the session
-        # parallelism. Catalyst pushes the gate predicate all the way into
-        # the scan stage — correct at scale (filter near data over many
-        # splits) but the fixture parquet is ONE split, so the whole
-        # marker/quality arithmetic ran serially in the scan task (measured
-        # 8-12 s; 2.4 s checkpoint + 0.7-3 s parallel gates after). A
-        # repartition alone cannot help: the filter pushes straight through
-        # the exchange. On a wide multi-split table the flag's False path
-        # (pure plan, no input materialization) is the right choice.
-        docs = _widen(docs.select("doc_id", "text"), "doc_id").localCheckpoint(
-            eager=True
-        )
-        _live_checkpoints.append(docs)
+    # Materialize the (doc_id, text) input once, widened to the session
+    # parallelism. Catalyst pushes the gate predicate all the way into
+    # the scan stage — correct at scale (filter near data over many
+    # splits) but the fixture parquet is ONE split, so the whole
+    # marker/quality arithmetic ran serially in the scan task (measured
+    # 8-12 s; 2.4 s checkpoint + 0.7-3 s parallel gates after). A
+    # repartition alone cannot help: the filter pushes straight through
+    # the exchange.
+    docs = physical.checkpoint(physical.widen(docs.select("doc_id", "text"), "doc_id"))
     lang_col = lang_best_struct(F.col("text"))["lang"]
     q = quality_exprs(F.col("text"))
     base = (
@@ -125,18 +98,16 @@ def build_training_corpus(
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    if materialize_survivors:
-        # The MinHash stage references the survivor set from several join
-        # sides (signature agg, both band-join sides, both verification
-        # sides) — without materialization Catalyst recomputes the whole
-        # gate+window subtree per reference (measured 44 s -> 13 s at
-        # sf0.1). localCheckpoint also truncates lineage ahead of the
-        # iterative component rounds. Eager (not lazy): the first consumer
-        # is the LSH signature aggregate fanning out to four join sides —
-        # lazy checkpointing let that first multi-sided stage race the
-        # materialization (VERDICT r4 next-steps #5).
-        exact = exact.localCheckpoint(eager=True)
-        _live_checkpoints.append(exact)
+    # The MinHash stage references the survivor set from several join
+    # sides (signature agg, both band-join sides, both verification
+    # sides) — without materialization Catalyst recomputes the whole
+    # gate+window subtree per reference (measured 44 s -> 13 s at
+    # sf0.1). localCheckpoint also truncates lineage ahead of the
+    # iterative component rounds. Eager (not lazy): the first consumer
+    # is the LSH signature aggregate fanning out to four join sides —
+    # lazy checkpointing let that first multi-sided stage race the
+    # materialization (VERDICT r4 next-steps #5).
+    exact = physical.checkpoint(exact)
     if eval_docs is not None:
         # decontamination gate AFTER the exact-dedup checkpoint: exact
         # duplicates share identical text and therefore identical
@@ -306,7 +277,6 @@ def contamination(
     window: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_eval: bool = True,
     eval_windows: DataFrame | None = None,
 ) -> DataFrame:
     """Benchmark contamination flags — (doc_id, n_eval_windows) for every
@@ -319,36 +289,29 @@ def contamination(
     benchmark-sized (10^4-10^6 docs -> 10^7-10^8 distinct window hashes of
     8 bytes each) while the training side is the 100 TB crawl. The eval
     window set therefore collapses to DISTINCT 60-bit md5-prefix hashes and
-    broadcasts (``broadcast_eval``), so the training side is ONE scan +
-    explode with a map-side hash probe — no shuffle of training data at
-    all. With ``broadcast_eval=False`` it degrades gracefully to a shuffle
-    semi-structured join on the window hash. Window sets are distinct per
-    doc on the training side and globally distinct on the eval side, so
-    ``count(*)`` after the join is exactly the number of DISTINCT
-    contaminated windows per training doc. Same hash/tokenization as
+    broadcasts, so the training side is ONE scan + explode with a map-side
+    hash probe — no shuffle of training data at all. Window sets are
+    distinct per doc on the training side and globally distinct on the
+    eval side, so ``count(*)`` after the join is exactly the number of
+    DISTINCT contaminated windows per training doc. Same hash/tokenization as
     ``dedup.substring_dup_pairs`` (collision bound documented there).
     """
-    from crawling_infrastructure_spark.operators.dedup import (
-        _widen,
-        hashed_shingle_stream,
-    )
+    from crawling_infrastructure_spark.operators.dedup import hashed_shingle_stream
 
-    ev = (
+    ev = F.broadcast(
         eval_windows
         if eval_windows is not None
         else eval_window_hashes(eval_docs, window, id_col, text_col)
     )
-    if broadcast_eval:
-        ev = F.broadcast(ev)
     # training side: hash inside the per-doc transform (the probe joins on
     # the hash anyway) and run the per-doc distinct AFTER the probe: the
     # eval side is globally distinct on wh, so the map-side join preserves
     # (doc_id, wh) multiplicity exactly and distinct-then-join equals
     # join-then-distinct — but the join drops every non-matching window
     # first, so the only distinct shuffle left is the (tiny) matched set
-    # instead of the whole corpus window stream. _widen spreads the
+    # instead of the whole corpus window stream. widen spreads the
     # explode off the fixture's single scan split.
-    tr = hashed_shingle_stream(_widen(docs, id_col), window, id_col, text_col)
+    tr = hashed_shingle_stream(physical.widen(docs, id_col), window, id_col, text_col)
     return (
         tr.join(ev, "wh")
         .dropDuplicates(["doc_id", "wh"])
@@ -363,14 +326,13 @@ def decontaminate(
     window: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """``docs`` minus every document ``contamination`` flags — the actual
     pre-training hygiene step (drop training docs that leak the benchmark).
     One anti-join against the flag set; column set passes through."""
-    flagged = contamination(
-        docs, eval_docs, window, id_col, text_col, broadcast_eval
-    ).select(F.col("doc_id").alias(id_col))
+    flagged = contamination(docs, eval_docs, window, id_col, text_col).select(
+        F.col("doc_id").alias(id_col)
+    )
     return docs.join(flagged, id_col, "left_anti")
 
 

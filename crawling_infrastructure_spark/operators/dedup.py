@@ -31,24 +31,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# The final connected-components round's localCheckpoint backs the returned
-# plan and cannot be unpersisted before the caller's action — loopers
-# (bench retries, repeated driver queries) drain it here. Same contract as
-# operators/corpus._live_checkpoints (which chains to this on release).
-_live_checkpoints: list[DataFrame] = []
-
-
-def release_checkpoints() -> int:
-    """Unpersist finished component checkpoints. Idempotent and safe when
-    the session is already gone. Returns the number released."""
-    n = 0
-    while _live_checkpoints:
-        try:
-            _live_checkpoints.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
+from crawling_infrastructure_spark.operators import physical
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -99,16 +82,6 @@ def word_shingles(docs: DataFrame, n: int = 3, id_col: str = "doc_id", text_col:
     )
 
 
-def _widen(df: DataFrame, key: str) -> DataFrame:
-    """Hash-repartition to the session parallelism. The fixture corpus is a
-    one-row-group parquet file, so every scan is ONE split and the heavy
-    explode/hash/partial-aggregate map work right above it runs in a single
-    task (guide §2.5 input skew); one cheap shuffle of the input rows buys
-    a fully parallel map stage. Scale-adaptive (defaultParallelism), and a
-    near-no-op on a real multi-file table whose scan is already wide."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
-
-
 def hashed_shingle_stream(
     docs: DataFrame,
     n: int,
@@ -155,7 +128,6 @@ def ngram_jaccard_pairs(
     docs: DataFrame, n: int = 3, threshold: float = 0.8,
     id_col: str = "doc_id", text_col: str = "text",
     max_shingle_df: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for every pair sharing >= 1 shingle.
     Returns (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard >= threshold.
@@ -167,13 +139,12 @@ def ngram_jaccard_pairs(
     shingles carry no near-dup signal. The SQL oracle applies the identical
     cap.
 
-    ``materialize`` (default on, same contract as minhash_lsh_pairs): the
-    capped shingle set feeds FOUR plan sides (both self-join sides plus
-    both size lookups) and Catalyst re-evaluates the whole
-    explode+distinct+window subtree per reference (measured plan: 8 scans,
-    28 exchanges, zero reuse). One localCheckpoint — the same rows the
-    self-join shuffles anyway — makes the text pass run exactly once;
-    drained via release_checkpoints().
+    The capped shingle set is checkpointed: it feeds FOUR plan sides
+    (both self-join sides plus both size lookups) and Catalyst would
+    re-evaluate the whole explode+distinct+window subtree per reference
+    (measured plan: 8 scans, 28 exchanges, zero reuse). One
+    localCheckpoint — the same rows the self-join shuffles anyway — makes
+    the text pass run exactly once; drained via release_checkpoints().
 
     Every exchange (distinct, DF-cap window, self-join, checkpoint)
     carries the 60-bit window hash instead of the shingle string —
@@ -181,7 +152,7 @@ def ngram_jaccard_pairs(
     documented collision tolerance, and the fixture is audited globally
     collision-free at every SF, so the output is identical."""
     sh = hashed_shingle_stream(
-        _widen(docs, id_col), n, id_col, text_col, distinct=True
+        physical.widen(docs, id_col), n, id_col, text_col, distinct=True
     )
     if max_shingle_df is not None:
         # window count shares the hash exchange with the self-join below
@@ -190,18 +161,20 @@ def ngram_jaccard_pairs(
         sh = sh.withColumn("_df", F.count("*").over(w)).filter(
             F.col("_df") <= max_shingle_df
         ).drop("_df")
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
-        _live_checkpoints.append(sh)
+    sh = physical.checkpoint(sh)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     # probe side 4x wider than the core count: the self-join emits ~10^8
     # narrow pair rows at sf1.0 and the per-task partial-aggregation hash
     # map over them is the memory hot spot — more, smaller tasks keep the
     # maps in cache and off the spill path (guide §5 "more partitions,
     # smaller per-task state"; interleaved A/B: 20.4 s -> 14.9 s clean,
-    # 84 s -> 20 s under memory-pressure weather)
-    par = sh.sparkSession.sparkContext.defaultParallelism
-    a = sh.select(F.col("doc_id").alias("doc_a"), "wh").repartition(4 * par, "doc_a")
+    # 84 s -> 20 s under memory-pressure weather). Holds only while the
+    # ``wh`` join compiles to a broadcast hash join, which streams the
+    # probe side in its own partitioning; a shuffle join on ``wh``
+    # re-partitions both sides by ``wh`` and discards this widening.
+    a = sh.select(F.col("doc_id").alias("doc_a"), "wh").repartition(
+        4 * physical.cores(sh), "doc_a"
+    )
     b = sh.select(F.col("doc_id").alias("doc_b"), "wh")
     shared = (
         a.join(b, "wh")
@@ -216,7 +189,6 @@ def substring_dup_pairs(
     docs: DataFrame, window: int = 8,
     id_col: str = "doc_id", text_col: str = "text",
     max_window_df: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact-substring duplicate pairs (Lee et al., "Deduplicating Training
     Data Makes Language Models Better", ACL 2022 — the suffix-array dedup,
@@ -240,11 +212,12 @@ def substring_dup_pairs(
     (hashed_shingle_stream), so the dedup shuffle carries 16-byte
     (id, hash) pairs, never window strings — inside the operator's
     already-documented collision tolerance (everything downstream of the
-    distinct was hash-keyed before). ``materialize`` (default on): the
-    capped hash set feeds both self-join sides; one localCheckpoint of
-    (doc_id, wh) longs replaces two executions of the text pass."""
+    distinct was hash-keyed before). The capped hash set feeds both
+    self-join sides; one localCheckpoint of (doc_id, wh) longs replaces
+    two executions of the text pass."""
     hashed = hashed_shingle_stream(
-        _widen(docs, id_col), window, id_col, text_col, modulus=None, distinct=True
+        physical.widen(docs, id_col), window, id_col, text_col,
+        modulus=None, distinct=True,
     )
     if max_window_df is not None:
         # window count shares the hash exchange with the self-join below
@@ -252,9 +225,7 @@ def substring_dup_pairs(
         hashed = hashed.withColumn("_df", F.count("*").over(w)).filter(
             F.col("_df") <= max_window_df
         ).drop("_df")
-    if materialize:
-        hashed = hashed.localCheckpoint(eager=True)
-        _live_checkpoints.append(hashed)
+    hashed = physical.checkpoint(hashed)
     a = hashed.select(F.col("doc_id").alias("doc_a"), "wh")
     b = hashed.select(F.col("doc_id").alias("doc_b"), "wh")
     return (
@@ -309,7 +280,7 @@ def minhash_signatures(
     disappears entirely; the only shuffle left is the map-side-combined
     (doc_id, k mins) partial aggregates."""
     a, b = minhash_coeffs(num_perm, seed)
-    hashed = hashed_shingle_stream(_widen(docs, "doc_id"), n).select(
+    hashed = hashed_shingle_stream(physical.widen(docs, "doc_id"), n).select(
         "doc_id", (F.col("wh") % F.lit(MINHASH_P)).alias("h")
     )
     aggs = [
@@ -395,13 +366,12 @@ def verify_jaccard_pairs(
     checkpoints the per-doc sets (small) so the two pair-side joins share
     one aggregation."""
     sets = (
-        hashed_shingle_stream(_widen(texts, "doc_id"), n)
+        hashed_shingle_stream(physical.widen(texts, "doc_id"), n)
         .groupBy("doc_id")
         .agg(F.collect_set("wh").alias("_set"))
     )
     if materialize:
-        sets = sets.localCheckpoint(eager=True)
-        _live_checkpoints.append(sets)
+        sets = physical.checkpoint(sets)
     sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("_set").alias("_sa"))
     sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("_set").alias("_sb"))
     shared = F.size(F.array_intersect(F.col("_sa"), F.col("_sb")))
@@ -424,7 +394,7 @@ def verify_jaccard_pairs(
 
 def minhash_lsh_pairs(
     docs: DataFrame, num_perm: int = 32, bands: int | None = None, n: int = 3,
-    threshold: float = 0.8, seed: int = 42, materialize: bool = True,
+    threshold: float = 0.8, seed: int = 42,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash signatures + banded LSH: band-bucket
     equi-joins propose candidate pairs, and exact Jaccard is computed for
@@ -436,43 +406,37 @@ def minhash_lsh_pairs(
     (deterministic across workers — Python's hash() is salted per process
     and must never reach a shuffle key).
 
-    ``materialize`` (default on): without it, Catalyst evaluates the
-    sketch subtree per REFERENCE — twice for the self-join sides, and the
-    shingle pass twice more inside verification — five passes over the
-    text for one logical pass (exchange reuse can't save it: each side
-    projects a different id alias, so the exchanges aren't canonically
-    equal). Materializing the band rows (one row per doc per band — far
-    smaller than the text) and the candidate pairs (O(near-dup pairs))
-    makes every expensive thing run exactly once, and lets verification
-    semi-join-prune the text side to candidate-referenced docs. At the
-    10^9-doc point that is 1 sketch pass + 1 corpus scan instead of 5
-    text passes. Pass ``materialize=False`` for a pure single-plan form
-    (plan inspection, streaming contexts). Checkpoints are registered for
-    ``release_checkpoints()``."""
+    The band rows and candidate pairs are checkpointed: otherwise
+    Catalyst evaluates the sketch subtree per REFERENCE — twice for the
+    self-join sides, and the shingle pass twice more inside verification
+    — five passes over the text for one logical pass (exchange reuse
+    can't save it: each side projects a different id alias, so the
+    exchanges aren't canonically equal). Materializing the band rows (one
+    row per doc per band — far smaller than the text) and the candidate
+    pairs (O(near-dup pairs)) makes every expensive thing run exactly
+    once, and lets verification semi-join-prune the text side to
+    candidate-referenced docs. At the 10^9-doc point that is 1 sketch pass
+    + 1 corpus scan instead of 5 text passes. Checkpoints are registered
+    for ``release_checkpoints()``."""
     docs = docs.select(F.col("doc_id").cast("long"), "text")
-    band_rows = minhash_band_rows(docs, num_perm, bands, n, threshold, seed)
-    if materialize:
-        band_rows = band_rows.localCheckpoint(eager=True)
-        _live_checkpoints.append(band_rows)
+    band_rows = physical.checkpoint(
+        minhash_band_rows(docs, num_perm, bands, n, threshold, seed)
+    )
     l = band_rows.select(F.col("doc_id").alias("doc_a"), "band", "band_hash")
     r = band_rows.select(F.col("doc_id").alias("doc_b"), "band", "band_hash")
-    candidates = (
+    candidates = physical.checkpoint(
         l.join(r, ["band", "band_hash"])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
         .dropDuplicates()
     )
-    texts = docs
-    if materialize:
-        candidates = candidates.localCheckpoint(eager=True)
-        _live_checkpoints.append(candidates)
-        ids = (
-            candidates.select(F.col("doc_a").alias("doc_id"))
-            .unionByName(candidates.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
-        texts = docs.join(ids, "doc_id", "left_semi")
-    return verify_jaccard_pairs(candidates, texts, n, threshold, materialize=materialize)
+    ids = (
+        candidates.select(F.col("doc_a").alias("doc_id"))
+        .unionByName(candidates.select(F.col("doc_b").alias("doc_id")))
+        .distinct()
+    )
+    texts = docs.join(ids, "doc_id", "left_semi")
+    return verify_jaccard_pairs(candidates, texts, n, threshold, materialize=True)
 
 
 # ---------------------------------------------------------------------------
@@ -491,7 +455,7 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     fingerprint is set iff strictly more than half the tokens have bit i
     set (ties clear the bit, matching the classic sum(2b-1) > 0 vote)."""
     toks = F.split(F.lower(F.col("text")), " ")
-    t = _widen(docs, "doc_id").select(
+    t = physical.widen(docs, "doc_id").select(
         F.col("doc_id").cast("long").alias("doc_id"), F.explode(toks).alias("tok")
     )
     h = md5_prefix_hash_col(F.col("tok"), modulus=None)
@@ -510,18 +474,13 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     return voted.select("doc_id", fp.alias("simhash"))
 
 
-def simhash_neardup_pairs(
-    docs: DataFrame, max_hamming: int = 3, materialize: bool = True
-) -> DataFrame:
+def simhash_neardup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Pairs with hamming(simhash) <= max_hamming via 4x15-bit pigeonhole
     bucketing (any pair within distance 3 agrees on >= 1 of 4 pieces).
-    ``materialize`` checkpoints the fingerprints (two longs per doc) so the
+    The fingerprints (two longs per doc) are checkpointed so the
     token-explode + 61-aggregate sketch pass runs once instead of once per
     self-join side."""
-    fp = simhash_fingerprints(docs)
-    if materialize:
-        fp = fp.localCheckpoint(eager=True)
-        _live_checkpoints.append(fp)
+    fp = physical.checkpoint(simhash_fingerprints(docs))
     pieces = fp.select(
         "doc_id",
         "simhash",
@@ -573,7 +532,6 @@ def embedding_cosine_neardup(
     from crawling_infrastructure_spark.operators.similarity import (
         _fixed_dim,
         _norm_expr,
-        _parallelism,
         with_staged_dot,
     )
 
@@ -588,10 +546,10 @@ def embedding_cosine_neardup(
         norm.alias("nb"), F.col(block_col).alias("blk"),
     )
     if broadcast_pairs:
-        a = a.repartition(_parallelism(emb), "id_a")
+        a = physical.widen(a, "id_a")
         pairs = a.join(F.broadcast(b), "blk")
     else:
-        s = _parallelism(emb)
+        s = physical.cores(emb)
         a_s = a.withColumn("_salt", F.pmod(F.col("id_a"), F.lit(s)))
         b_s = b.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(s - 1))))
         pairs = a_s.join(b_s, ["blk", "_salt"]).drop("_salt")
@@ -737,14 +695,14 @@ def connected_components(
         # once the new checkpoint is materialized — without the unpersist
         # every round leaks its edge RDD for the session lifetime
         if stale is not None:
-            stale.unpersist()
+            physical.unpersist(stale)
         stale = e
         if cur == prev:
             break
         prev = cur
     # the FINAL round's checkpoint backs the returned plan; callers that
     # loop (bench retries) reclaim it via release_checkpoints()
-    _live_checkpoints.append(e)
+    physical.register(e)
     # converged: star graphs, every edge is (member, root) with root < member
     members = e.select(F.col("d").alias("id"), F.col("s").alias("component"))
     # guard: if a member appears with two roots (max_rounds hit before

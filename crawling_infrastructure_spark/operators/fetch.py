@@ -1,6 +1,6 @@
 """The fetch-map — SURVEY.md §2.8, an exact port of the reference's
 ``CrawlHandler.run`` state machine (crawler/src/handler.ts:51-206) as a
-vectorized ``groupBy(host).applyInPandas`` operator.
+vectorized ``mapInPandas`` operator.
 
 Semantics reproduced per item (with reference lines):
 - retries += 1 per attempt                       handler.ts:108
@@ -210,37 +210,19 @@ def resolve_against_corpus(
     return found.unionByName(missing)
 
 
-def fetch_batch(
-    claimed: DataFrame,
-    corpus: DataFrame,
-    fetcher: HermeticFetcher,
-    by_host: bool = False,
-    host_salt: int = 32,
-    shuffle: bool = False,
-    fingerprints: bool = False,
-    proxies: DataFrame | None = None,
+def _fetch_stage(
+    resolved: DataFrame,
+    fetcher,
+    fingerprints: bool,
+    proxies: DataFrame | None,
 ) -> DataFrame:
-    """claimed frontier batch -> FETCH_RESULT_SCHEMA rows.
-
-    Default path: ``mapInPandas`` — the per-item state machine is row-
-    independent (politeness already enforced at claim time by the token
-    bucket), so no shuffle is needed at all and Zipf-head hosts can't
-    straggle a task. This is the 100 TB-correct plan: fetch parallelism ==
-    scan parallelism.
-
-    ``shuffle=True``: claim-all batches — see resolve_against_corpus: the
-    resolve join is hinted to a url-hash shuffle so the Python stage gets
-    ROW-balanced partitions instead of the corpus scan's byte-balanced,
-    row-skewed splits.
-
-    ``by_host=True``: groupBy(host, salt) + applyInPandas for fetchers that
-    hold per-host state (connection pools, per-host rate limiters — what the
-    reference's one-worker-per-batch layout gave it). The salt splits hot
-    hosts (SURVEY.md O8): without it the Zipf head becomes one giant group
-    and a single Python worker bottlenecks BOTH small and large clusters —
-    measured: fetch wall was dominated by the top host until salted.
-    """
-    resolved = resolve_against_corpus(claimed, corpus, shuffle=shuffle)
+    """Resolved (url, url_hash, host, retries, warc_ts[, html, lang]) rows
+    -> FETCH_RESULT_SCHEMA rows: the request-context columns, then one
+    Arrow-batched ``mapInPandas`` stage over ``fetcher.fetch_group``.
+    The per-item state machine is row-independent (politeness already
+    enforced at claim time by the token bucket), so no shuffle is needed
+    at all and Zipf-head hosts can't straggle a task: fetch parallelism ==
+    input parallelism."""
     # Opt-in per-request context (the reference sets these per worker:
     # UA/Accept-Language at helpers.ts:28-52, proxy via the get_proxy hook
     # proxy.ts:124-150). Attached as deterministic JVM columns BEFORE the
@@ -260,14 +242,6 @@ def fetch_batch(
         from crawling_infrastructure_spark.operators.proxy import assign_proxies
 
         resolved = assign_proxies(resolved, proxies, key="url_hash")
-    if by_host:
-        salted = resolved.withColumn(
-            "_salt", F.pmod(F.col("url_hash"), F.lit(host_salt)).cast("int")
-        )
-        return salted.groupBy("host", "_salt").applyInPandas(
-            lambda pdf: fetcher.fetch_group(pdf.drop(columns=["_salt"])),
-            FETCH_RESULT_SCHEMA,
-        )
 
     def run(batches):
         for pdf in batches:
@@ -275,3 +249,25 @@ def fetch_batch(
                 yield fetcher.fetch_group(pdf)
 
     return resolved.mapInPandas(run, FETCH_RESULT_SCHEMA)
+
+
+def fetch_batch(
+    claimed: DataFrame,
+    corpus: DataFrame,
+    fetcher: HermeticFetcher,
+    shuffle: bool = False,
+    fingerprints: bool = False,
+    proxies: DataFrame | None = None,
+) -> DataFrame:
+    """claimed frontier batch -> FETCH_RESULT_SCHEMA rows: resolve against
+    the corpus, then the shared fetch stage (``_fetch_stage``).
+
+    ``shuffle=True``: claim-all batches — see resolve_against_corpus: the
+    resolve join is hinted to a url-hash shuffle so the Python stage gets
+    ROW-balanced partitions instead of the corpus scan's byte-balanced,
+    row-skewed splits.
+    """
+    return _fetch_stage(
+        resolve_against_corpus(claimed, corpus, shuffle=shuffle),
+        fetcher, fingerprints, proxies,
+    )

@@ -18,9 +18,11 @@ intermediate actions:
   10^7-host graphs each iteration is exactly one shuffle (groupBy dst)
   plus one join, and Catalyst/AQE handles skew (a mega-host receiving
   10^6 inlinks) via adaptive skew-join splitting.
-- ranks are (node, rank) — tiny next to edges. The join broadcast-hints
-  the rank side when the node count is bounded; edges never re-shuffle
-  into a new layout between iterations beyond the join requirement.
+- ranks are (node, rank) — tiny next to edges, but not hinted into a
+  broadcast: a PAGE graph at 10^10 nodes does not fit executor memory, so
+  the join strategy is left to the planner's size-based choice; edges
+  never re-shuffle into a new layout between iterations beyond the join
+  requirement.
 - dangling nodes (no outlinks) keep the classic redistribute-nothing
   semantics of the damped formula: rank mass leaks, matching the
   textbook per-node formula rank = (1-d)/n + d * sum(in/deg) — the same
@@ -47,17 +49,12 @@ def pagerank(
     damping: float = 0.85,
     src_col: str = "src",
     dst_col: str = "dst",
-    broadcast_ranks: bool = False,
 ) -> DataFrame:
     """(node, rank) after ``iters`` damped PageRank iterations over the
     DISTINCT edge set (parallel edges collapse — a page linking twice
     votes once, the host-graph convention). Self-loops are dropped.
-    Nodes = every endpoint appearing in the edge table.
-
-    ``broadcast_ranks``: hint the (node, rank) side into the edge join —
-    correct when the node count is executor-memory bounded (e.g. a host
-    graph: 10^7 hosts x 16 B fits; a PAGE graph at 10^10 nodes does not,
-    leave it off and let the shuffle join partition both sides by src).
+    Nodes = every endpoint appearing in the edge table; an edge set that
+    is empty or all self-loops has none and yields no rows.
     """
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
@@ -71,15 +68,16 @@ def pagerank(
     )
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
     n = nodes.count()  # one scalar; the graph size every formulation needs
+    if n == 0:
+        return nodes.select("node", F.lit(0.0).alias("rank"))
     base = (1.0 - damping) / n
 
     # in-engine half-up rounding (Python round() is banker's — not parity)
     ranks = nodes.select("node", F.round(F.lit(1.0 / n), 9).alias("rank"))
     for _ in range(iters):
-        r = F.broadcast(ranks) if broadcast_ranks else ranks
         contrib = (
             e.join(deg, "src")
-            .join(r, e.src == r.node)
+            .join(ranks, e.src == ranks.node)
             .select(F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
             .groupBy("node")
             .agg(F.sum("c").alias("in_mass"))

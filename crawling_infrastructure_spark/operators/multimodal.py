@@ -75,7 +75,6 @@ def sniff_format_col(payload) -> F.Column:
 
 def extract_media_features(
     media: DataFrame, id_col: str = "media_id", payload_col: str = "payload",
-    use_real_decoder: bool = False,
 ) -> DataFrame:
     """(id, binary payload) -> (id, n_bytes, format, feature[dim]).
 
@@ -85,13 +84,16 @@ def extract_media_features(
     feature is one projected expression (not a mapInPandas that rewrites the
     whole row set), Catalyst prunes the Python stage entirely when a caller
     drops the feature column — a metadata-only query over 100 TB of media
-    never launches a Python worker."""
-    fe = decode_media if use_real_decoder else fake_feature
+    never launches a Python worker. The decode is the stubbed step
+    (fake_feature); a real codec (decode_media) slots in here."""
 
     @F.pandas_udf(T.ArrayType(T.FloatType()))
     def feature_udf(payloads: pd.Series) -> pd.Series:
         return pd.Series(
-            [fe(bytes(p) if p is not None else b"").tolist() for p in payloads]
+            [
+                fake_feature(bytes(p) if p is not None else b"").tolist()
+                for p in payloads
+            ]
         )
 
     p = F.col(payload_col)
@@ -142,7 +144,6 @@ def resize_media(
     height: int,
     id_col: str = "media_id",
     payload_col: str = "payload",
-    use_real_decoder: bool = False,
 ) -> DataFrame:
     """(id, binary payload) -> (id, width, height, pixels) resized via
     nearest-neighbor over the decoded array — the resize leg of the
@@ -150,20 +151,14 @@ def resize_media(
     UDF): resize REPLACES the payload column rather than extending the row,
     so the batch both consumes and emits binary columns and the output
     schema is declared once (RESIZE_SCHEMA). The decode is the stubbed
-    sandbox step (fake_decode_image; real-codec path raises, same contract
-    as decode_media); the nearest-neighbor index arithmetic, Arrow batch
-    mechanics, and schema are the real thing a PIL-backed decoder slots
-    under unchanged."""
+    step (fake_decode_image); the nearest-neighbor index arithmetic, Arrow
+    batch mechanics, and schema are the real thing a PIL-backed decoder
+    slots under unchanged."""
 
     def run(batches):
         for pdf in batches:
             ids, pix = [], []
             for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if use_real_decoder:
-                    raise NotImplementedError(
-                        "real image resize requires PIL; sandbox uses the "
-                        "deterministic fake decoder"
-                    )
                 raw = bytes(payload) if payload is not None else b""
                 img = fake_decode_image(raw, max(width * 2, 1), max(height * 2, 1))
                 ys = (np.arange(height) * img.shape[0] // height).astype(np.int64)

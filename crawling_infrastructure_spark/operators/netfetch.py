@@ -36,8 +36,9 @@ from crawling_infrastructure_spark.functions.fingerprint import (
 from crawling_infrastructure_spark.operators.fetch import (
     BLOCKED_HTTP_CODES,
     CrawlFunction,
+    _fetch_stage,
 )
-from crawling_infrastructure_spark.schema import FETCH_RESULT_SCHEMA, Status
+from crawling_infrastructure_spark.schema import Status
 
 #: got retries idempotent requests on these statuses (got@9 defaults, the
 #: version the reference pins); blocked codes are NOT among them — a block
@@ -231,33 +232,14 @@ def fetch_batch_network(
 ) -> DataFrame:
     """claimed frontier batch -> FETCH_RESULT_SCHEMA rows over real sockets.
 
-    Identical plan to operators/fetch.fetch_batch minus the corpus resolve
-    join: request-context columns (fingerprints, per-row proxy) attach
-    JVM-side, then one Arrow-batched Python stage does the I/O. Fetch
-    parallelism == claim partitioning; no shuffle."""
+    The same fetch stage as operators/fetch.fetch_batch (request-context
+    columns attach JVM-side, then one Arrow-batched Python stage does the
+    I/O) minus the corpus resolve join: real URLs resolve over the wire.
+    Fetch parallelism == claim partitioning; no shuffle."""
     from pyspark.sql import functions as F
 
     resolved = claimed.select(
         "url", "url_hash", "host", "retries",
         F.lit(None).cast("timestamp").alias("warc_ts"),
     )
-    if fingerprints:
-        from crawling_infrastructure_spark.functions.fingerprint import (
-            accept_language_header,
-            user_agent,
-        )
-
-        resolved = resolved.withColumn("ua", user_agent(F.col("url"))).withColumn(
-            "accept_language", accept_language_header(F.col("url"))
-        )
-    if proxies is not None:
-        from crawling_infrastructure_spark.operators.proxy import assign_proxies
-
-        resolved = assign_proxies(resolved, proxies, key="url_hash")
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf):
-                yield fetcher.fetch_group(pdf)
-
-    return resolved.mapInPandas(run, FETCH_RESULT_SCHEMA)
+    return _fetch_stage(resolved, fetcher, fingerprints, proxies)

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from crawling_infrastructure_spark.operators import physical
+
 # Unroll per-pair array arithmetic into explicit element expressions only up
 # to this dimension: each term is a handful of codegen ops, so 256 dims stay
 # far under the 64 KB generated-method limit; wider vectors fall back to the
@@ -99,14 +101,8 @@ def _norm_expr(c, dim: int | None):
     return F.sqrt(acc)
 
 
-def _parallelism(df: DataFrame) -> int:
-    """Scale-adaptive fan-out for pair-explosion stages: the session's total
-    cores (defaultParallelism), never a constant tuned to one host."""
-    return df.sparkSession.sparkContext.defaultParallelism
-
-
 def cosine_topk_bruteforce(
-    queries: DataFrame, corpus: DataFrame, k: int = 5, broadcast_queries: bool = True
+    queries: DataFrame, corpus: DataFrame, k: int = 5
 ) -> DataFrame:
     """Exact top-k by cosine. queries/corpus: (vec_id, embedding).
     Returns (query_id, neighbor_id, cosine, rank). The query side broadcasts
@@ -131,9 +127,8 @@ def cosine_topk_bruteforce(
         F.col("embedding").alias("ec"),
         _norm_expr(F.col("embedding"), dim).alias("nc"),
     )
-    if broadcast_queries:
-        q = F.broadcast(q)
-        c = c.repartition(_parallelism(corpus), "neighbor_id")
+    q = F.broadcast(q)
+    c = physical.widen(c, "neighbor_id")
     scored = with_staged_dot(
         c.crossJoin(q).filter(F.col("query_id") != F.col("neighbor_id")),
         "eq", "ec", "_dot", dim,
@@ -151,7 +146,6 @@ def cosine_topk_bruteforce(
 
 def cosine_topk_blocked(
     queries: DataFrame, corpus: DataFrame, k: int = 5, block_col: str = "label",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """IVF-bucketed variant: only same-block pairs score. The probe set is
     the small side (thousands of probes vs the corpus), so it broadcasts
@@ -159,8 +153,7 @@ def cosine_topk_blocked(
     map-side over corpus splits instead of shuffling both sides into a
     handful of block-keyed partitions whose tiny input bytes AQE coalesces
     into ONE task while the join output explodes 10^3x inside it (the
-    exploding-join trap, guide §3.3). ``broadcast_queries=False`` restores
-    the shuffle equi-join for probe sets too big to broadcast."""
+    exploding-join trap, guide §3.3)."""
     dim = _fixed_dim(corpus, "embedding")
     q = queries.select(
         F.col("vec_id").alias("query_id"),
@@ -174,9 +167,8 @@ def cosine_topk_blocked(
         _norm_expr(F.col("embedding"), dim).alias("nc"),
         F.col(block_col).alias("blk"),
     )
-    if broadcast_queries:
-        q = F.broadcast(q)
-        c = c.repartition(_parallelism(corpus), "neighbor_id")
+    q = F.broadcast(q)
+    c = physical.widen(c, "neighbor_id")
     scored = with_staged_dot(
         c.join(q, "blk").filter(F.col("query_id") != F.col("neighbor_id")),
         "eq", "ec", "_dot", dim,
@@ -241,16 +233,13 @@ def with_cell(
     vec_col: str = "embedding",
     out: str = "blk",
     dim: int | None = None,
-    widen: bool = False,
 ) -> DataFrame:
     """``df`` + the index of each row's nearest centroid (squared L2,
     ties -> lower index) as column ``out``. One BroadcastNestedLoopJoin
     against the 1-row codebook relation (a per-partition constant at
-    runtime) — no shuffle of the big side.
-
-    ``widen`` repartitions ``df`` to the session parallelism first — for
-    inputs whose scan has fewer splits than cores (the sandbox's
-    one-row-group parquet), so the O(rows x cells x dim) assignment
+    runtime) — no shuffle of the big side. Callers whose scan has fewer
+    splits than cores (the fixture's one-row-group parquet) pass a
+    ``physical.widen``-ed ``df``, so the O(rows x cells x dim) assignment
     arithmetic doesn't run in one task; the tiny vector shuffle is noise
     next to it.
 
@@ -264,8 +253,6 @@ def with_cell(
     reverses and the staged form (see with_staged_dot) is the shape to
     bring back."""
     cb = _codebook(df.sparkSession, centroids)
-    if widen:
-        df = df.repartition(_parallelism(df))
     return (
         df.crossJoin(cb)
         .withColumn(out, F.array_min(_dist_structs(F.col(vec_col), F.col("_cb")))["j"])
@@ -305,14 +292,7 @@ def kmeans_train(
     # ``iters`` assignment jobs re-runs the scan + widening shuffle from
     # parquet (checkpoint registered for release_checkpoints; vectors
     # only — k*dim driver state is unchanged)
-    from crawling_infrastructure_spark.operators import dedup as _dedup
-
-    ev = (
-        emb.select(F.col(vec_col).alias("_v"))
-        .repartition(_parallelism(emb))
-        .localCheckpoint(eager=True)
-    )
-    _dedup._live_checkpoints.append(ev)
+    ev = physical.checkpoint(physical.widen(emb.select(F.col(vec_col).alias("_v"))))
     for _ in range(iters):
         assigned = with_cell(ev, centroids, vec_col="_v", out="j").select(
             "j", F.posexplode("_v").alias("pos", "x")
@@ -369,7 +349,7 @@ def cosine_topk_ivf(
     map-side pass, and the query-side explode multiplies only the tiny
     probe set."""
     bq = with_probe_cells(queries, centroids, nprobe)
-    bc = with_cell(corpus, centroids, widen=True)
+    bc = with_cell(physical.widen(corpus), centroids)
     return cosine_topk_blocked(bq, bc, k=k, block_col="blk")
 
 
@@ -405,26 +385,22 @@ def semdedup(
     hint bypasses autoBroadcastJoinThreshold — so it is right only while
     the entire corpus side fits in executor memory (the sandbox); False is
     the 10^9-vector path — a salted shuffle equi-join on (cell, salt)
-    that splits each cell's quadratic pair group across ``_parallelism``
+    that splits each cell's quadratic pair group across ``physical.cores``
     tasks, because a plain cell-keyed shuffle both bottlenecks on
     #cells partitions and invites AQE to coalesce the tiny input bytes
     into one task while the join OUTPUT explodes inside it."""
     centroids = kmeans_train(emb, k, iters, vec_col)
     dim = _fixed_dim(emb, vec_col)
     cells = with_cell(
-        emb.select("vec_id", vec_col), centroids, vec_col=vec_col, out="cell",
-        widen=True,
+        physical.widen(emb.select("vec_id", vec_col)), centroids,
+        vec_col=vec_col, out="cell",
     ).withColumn("_n", _norm_expr(F.col(vec_col), dim))
     # referenced from three join sides below — materialize once instead of
     # re-running the scan + quantizer assignment per reference (same pattern
-    # as corpus.build_training_corpus survivors; drained by
-    # dedup.release_checkpoints via the shared registry). The per-row norm
+    # as corpus.build_training_corpus survivors). The per-row norm
     # (identical fold to the old per-pair computation, so identical floats)
     # rides the checkpoint, leaving ONE unrolled dot product per pair.
-    from crawling_infrastructure_spark.operators import dedup as _dedup
-
-    cells = cells.localCheckpoint(eager=True)
-    _dedup._live_checkpoints.append(cells)
+    cells = physical.checkpoint(cells)
     a = cells.select("vec_id", F.col(vec_col).alias("ea"), F.col("_n").alias("na"), "cell")
     b = cells.select(
         F.col("vec_id").alias("other"), F.col(vec_col).alias("eb"), F.col("_n").alias("nb"), "cell"
@@ -437,7 +413,7 @@ def semdedup(
     if broadcast_pairs:
         pairs = a.join(F.broadcast(b), "cell")
     else:
-        s = _parallelism(emb)
+        s = physical.cores(emb)
         a_s = a.withColumn("_salt", F.pmod(F.col("vec_id"), F.lit(s)))
         b_s = b.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(s - 1))))
         pairs = a_s.join(b_s, ["cell", "_salt"]).drop("_salt")

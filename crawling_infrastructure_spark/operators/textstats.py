@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from crawling_infrastructure_spark.operators import physical
+
 # tiny marker-word lists per language (public stopword heads)
 LANG_MARKERS = {
     "en": ["the", "and", "of"],
@@ -52,10 +54,8 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     score). Implemented as array_max over (score, lang) structs, so the
     deterministic tie-break is language name DESCENDING (struct comparison
     is lexicographic) — the oracle must mirror that."""
-    from crawling_infrastructure_spark.operators.dedup import _widen
-
     best = lang_best_struct(F.col(text_col))
-    return _widen(docs, id_col).select(
+    return physical.widen(docs, id_col).select(
         F.col(id_col).alias("doc_id"),
         best["lang"].alias("guessed_lang"),
         best["score"].cast("int").alias("score"),
@@ -87,10 +87,8 @@ def quality_exprs(text_col) -> dict:
 def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Length / punctuation / stopword-ratio quality features + a combined
     score, the usual pre-training corpus filter features."""
-    from crawling_infrastructure_spark.operators.dedup import _widen
-
     e = quality_exprs(F.col(text_col))
-    return _widen(docs, id_col).select(
+    return physical.widen(docs, id_col).select(
         F.col(id_col).alias("doc_id"),
         *[e[k].alias(k) for k in ("n_chars", "n_tokens", "punct_ratio", "stopword_ratio", "quality")],
     )
@@ -110,10 +108,8 @@ def token_counts(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     pre-tokenizer pattern, kept to plain character classes so Java and RE2
     engines agree), and the chars/4 rule-of-thumb estimate. All JVM
     expressions — whole-stage codegen, no Python."""
-    from crawling_infrastructure_spark.operators.dedup import _widen
-
     toks = F.split(F.col(text_col), " ")
-    return _widen(docs, id_col).select(
+    return physical.widen(docs, id_col).select(
         F.col(id_col).alias("doc_id"),
         F.size(toks).alias("n_tokens"),
         F.size(F.array_distinct(toks)).alias("n_unique_tokens"),
@@ -125,10 +121,8 @@ def token_counts(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 def fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Normalization fingerprint: md5 over lowercased, whitespace-collapsed
     text — the cheap exact-dup key robust to formatting noise."""
-    from crawling_infrastructure_spark.operators.dedup import _widen
-
     norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-    return _widen(docs, id_col).select(
+    return physical.widen(docs, id_col).select(
         F.col(id_col).alias("doc_id"),
         F.md5(norm).alias("fingerprint"),
     )
@@ -172,9 +166,7 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     session parallelism first: the fixture parquet is one scan split, and
     without the spread both explode+partial-aggregate map stages run in a
     single task (guide §2.5 input skew)."""
-    from crawling_infrastructure_spark.operators.dedup import _widen
-
-    docs = _widen(docs, id_col)
+    docs = physical.widen(docs, id_col)
 
     def per_doc(n: int, prefix: str) -> DataFrame:
         counts = _ngram_occurrences(docs, n, id_col, text_col).groupBy(
@@ -225,8 +217,6 @@ def pii_scrub(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     n_phone, redacted_md5): the redacted text itself stays distributed
     (only its md5 surfaces, so the operator's output is compare-sized at
     any corpus scale). All-JVM regex — whole-stage codegen, no Python."""
-    from crawling_infrastructure_spark.operators.dedup import _widen
-
     t = F.col(text_col)
     counts = [
         F.regexp_count(t, F.lit(pat)).cast("long").alias(f"n_{name}")
@@ -235,7 +225,7 @@ def pii_scrub(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     red = t
     for pat, token in PII_PATTERNS.values():
         red = F.regexp_replace(red, pat, token)
-    return _widen(docs, id_col).select(
+    return physical.widen(docs, id_col).select(
         F.col(id_col).alias("doc_id"), *counts, F.md5(red).alias("redacted_md5")
     )
 
@@ -281,8 +271,7 @@ def lm_score(
     an O(total-corpus-tokens) executor-disk write that contradicted the
     100 TB shape and cost more than the recompute it saved.
     ``broadcast_model=False`` degrades every broadcast here (vocab map +
-    logprob probe) to shuffle joins for vocabularies too big to broadcast
-    (the same switch as contamination's broadcast_eval).
+    logprob probe) to shuffle joins for vocabularies too big to broadcast.
 
     Determinism: the vocab top-V is totally ordered (count desc, token
     asc), and each bigram log-prob is rounded half-up to 9 decimals
@@ -290,14 +279,12 @@ def lm_score(
     (~1e-16) snaps to engine-independent values (same device as
     linkrank.pagerank); the published average rounds to 4.
     """
-    from crawling_infrastructure_spark.operators.similarity import _parallelism
-
     # widen the scan: the fixture parquet is one row group -> one split,
     # which would serialize every explode/aggregate pass below; the text
     # shuffle this costs is one corpus pass, repaid three times (on a real
     # multi-file table the scan is already wide and this is a no-op cost)
     docs = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    docs = docs.repartition(_parallelism(docs))
+    docs = physical.widen(docs)
     toks = F.split(F.lower(F.col("text")), " ")
     uni = (
         docs.select(F.explode(toks).alias("gram"))

@@ -87,6 +87,14 @@ from crawling_infrastructure_spark.operators.seen import (
 )
 from crawling_infrastructure_spark.schema import FRONTIER_SCHEMA, SEEN_SCHEMA, Status
 
+# Claims at or above this size resolve against the corpus with a
+# SHUFFLE_HASH join hint (operators/fetch.resolve_against_corpus): a
+# claim-all batch otherwise broadcasts and hands the Python fetch the corpus
+# scan's byte-balanced but ROW-skewed splits (measured 4-17x fetch slowdown
+# at 100k rows). Politeness-bounded epochs stay below this and keep the
+# shuffle-free broadcast-resolve plan.
+FETCH_SHUFFLE_MIN_ROWS = 25_000
+
 
 @dataclass
 class EpochStats:
@@ -620,7 +628,7 @@ class CrawlJob:
             claimed,
             self.corpus,
             fetcher,
-            shuffle=n_claimed >= self.cfg.fetch_shuffle_min_rows,
+            shuffle=n_claimed >= FETCH_SHUFFLE_MIN_ROWS,
             fingerprints=self.cfg.fingerprint_rotation,
             proxies=pool,
         ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -751,7 +759,7 @@ class CrawlJob:
                 pages_err.append(e)
 
         pages_thread: threading.Thread | None = None
-        if stats.claimed < self.cfg.fetch_shuffle_min_rows:
+        if stats.claimed < FETCH_SHUFFLE_MIN_ROWS:
             pages_thread = threading.Thread(target=_pages_job, daemon=True)
             pages_thread.start()
         else:

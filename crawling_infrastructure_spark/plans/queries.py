@@ -26,6 +26,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from crawling_infrastructure_spark.operators import physical
 from crawling_infrastructure_spark.operators.dedup import (
     embedding_cosine_neardup,
     exact_dedup,
@@ -810,9 +811,7 @@ def q_corpus_budget_sample(spark, sf_dir):
     # (identical values to the old lang_id >< token_counts self-join),
     # widened so the regexp/marker arithmetic runs post-exchange on every
     # core instead of inside the single scan split
-    from crawling_infrastructure_spark.operators.dedup import _widen
-
-    docs = _widen(_t(spark, sf_dir, "documents"), "doc_id")
+    docs = physical.widen(_t(spark, sf_dir, "documents"), "doc_id")
     scored = docs.select(
         "doc_id",
         lang_best_struct(F.col("text"))["lang"].alias("guessed_lang"),

@@ -8,8 +8,8 @@ seeded corpus:
                 (url, warc_ts, html binary, text, lang). ``text`` is computed
                 at generation time with the ported ``clean_html`` and is the
                 byte-identity oracle.
-- hosts follow Zipf(s=1.2) — required so the hot-host salting path actually
-  engages (SURVEY.md §7.3 risk 4).
+- hosts follow Zipf(s=1.2) — required so hot-host skew actually shows in
+  the claim and fetch stages (SURVEY.md §7.3 risk 4).
 - every page embeds 0-20 outlinks (15% duplicate, 10% off-corpus, 5%
   relative) driving frontier growth / dedup / domain-count tests.
 - ``fail_map`` — deterministic fetch outcome per url (85 ok / 5 blocked /

@@ -6,6 +6,7 @@ driver oracle pins full-scale agreement with DuckDB separately."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from crawling_infrastructure_spark.operators.dedup import substring_dup_pairs
 from crawling_infrastructure_spark.operators.textstats import (
@@ -160,6 +161,43 @@ def test_host_priorities_buckets(spark):
     assert all(1 <= r.priority <= 5 for r in rows)
     assert by_host["hub"].priority == 5  # everyone links the hub
     assert by_host["hub"].rank == max(r.rank for r in rows)
+
+
+@pytest.mark.parametrize(
+    "edges", [[], [("a", "a"), ("b", "b")]], ids=["empty", "self_loops_only"]
+)
+def test_pagerank_no_nodes(spark, edges):
+    """An edge set with no non-loop edge has no nodes: both operators
+    return no rows instead of dividing by the zero node count."""
+    from crawling_infrastructure_spark.operators.linkrank import (
+        host_priorities,
+        pagerank,
+    )
+
+    df = spark.createDataFrame(edges, "host string, outlink_host string")
+    assert pagerank(df, src_col="host", dst_col="outlink_host").collect() == []
+    assert host_priorities(df).collect() == []
+
+
+def test_link_prioritize_single_host(spark, tmp_path):
+    """One host owning the whole frontier: every outlink is same-host, so
+    the host graph stays empty; the crawl runs and new rows keep the
+    static cfg.priority."""
+    from crawling_infrastructure_spark.config import TaskConfig
+    from crawling_infrastructure_spark.plans.epoch import CrawlJob
+    from crawling_infrastructure_spark.schema import FRONTIER_SCHEMA
+    from crawling_infrastructure_spark.sources.seeds import seeds_from_list
+    from crawling_infrastructure_spark.synth import fetch_outcome, gen_pages, seed_urls
+
+    corpus = gen_pages(spark, 60, 1)
+    cfg = TaskConfig(task_id="lp1", max_items_per_second=3, link_prioritize=True)
+    job = CrawlJob(spark, str(tmp_path / "cat"), corpus, cfg, outcome_fn=fetch_outcome)
+    hist = job.run(seeds=seeds_from_list(spark, seed_urls(1)), max_epochs=2)
+    assert len(hist) == 2 and hist[0].new_urls > 0
+    f = job.frontier_t.read(spark, FRONTIER_SCHEMA)
+    new = f.filter(f.epoch_added > 0).select("host", "priority").collect()
+    assert new and {r.priority for r in new} == {cfg.priority}
+    assert len({r.host for r in new}) == 1
 
 
 def test_link_prioritize_epoch_loop(spark, corpus, tmp_path):
@@ -323,6 +361,37 @@ def test_funnel_decontam_gate(spark):
     dirty = {r.doc_id for r in contamination(docs, ev).collect()}
     assert dirty  # the gate had something to do
     assert gated == plain - dirty
+
+
+def test_release_checkpoints_frees_every_operator_checkpoint(spark):
+    """One registry serves every checkpointing operator: after semdedup
+    (k-means and cell checkpoints), minhash_lsh_pairs and
+    build_training_corpus, corpus.release_checkpoints() frees every RDD
+    they persisted."""
+    from crawling_infrastructure_spark.operators.corpus import (
+        build_training_corpus,
+        release_checkpoints,
+    )
+    from crawling_infrastructure_spark.operators.dedup import minhash_lsh_pairs
+    from crawling_infrastructure_spark.operators.similarity import semdedup
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    release_checkpoints()
+    start = persistent()
+    base = "the and of for with this that from they have been more will home"
+    docs = _docs(spark, [f"{base} u{i % 12} v{i % 5} w{i % 3}" for i in range(36)])
+    emb = spark.createDataFrame(
+        [(i, [float(i % 7), float(i % 3), 1.0]) for i in range(36)],
+        "vec_id long, embedding array<float>",
+    )
+    semdedup(emb, k=2, iters=1).collect()
+    minhash_lsh_pairs(docs).collect()
+    build_training_corpus(docs, min_tokens=5).collect()
+    assert persistent() - start  # the operators did checkpoint
+    assert release_checkpoints() > 0
+    assert persistent() == start
 
 
 def test_arrange_packed_contiguous_shards(spark):
